@@ -13,11 +13,15 @@ import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from snowalert_spark import handlers as H
-from snowalert_spark.store import ResultsStore
+from snowalert_spark.store import ResultsStore, local_frame
 
 BATCH = 1000  # alert_dispatcher.py:15
+UPDATES = T.StructType(
+    [T.StructField(c, T.StringType()) for c in ("aid", "handled", "ticket")]
+)
 
 
 def main(spark: SparkSession, store: ResultsStore) -> int:
@@ -59,7 +63,7 @@ def main(spark: SparkSession, store: ResultsStore) -> int:
 
     if not updates:
         return 0
-    upd = spark.createDataFrame(updates, "aid string, handled string, ticket string")
+    upd = local_frame(spark, updates, UPDATES)
     store.upsert(
         "alerts",
         upd,

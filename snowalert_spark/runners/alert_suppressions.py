@@ -3,7 +3,10 @@
 Each ``*_ALERT_SUPPRESSION`` rule selects ids of alerts to suppress
 (over the data.alerts view, suppressed IS NULL); matching alerts get
 ``suppressed=true, suppression_rule=<rule>`` (MERGE, :24-31), and the
-remainder defaults to ``suppressed=false`` (:33-38)."""
+remainder defaults to ``suppressed=false`` (:33-38). The default rides
+on the last rule's MERGE as its WHEN NOT MATCHED BY SOURCE clause, so
+each rule publishes the table once; a separate UPDATE runs only when
+there is no rule or the last one raised."""
 
 from __future__ import annotations
 
@@ -33,7 +36,10 @@ def main(
 ) -> list[dict]:
     run_id = run_id or uuid.uuid4().hex
     results = []
-    for rule in registry.load_rules(ALERT_SUPPRESSION):
+    rules = registry.load_rules(ALERT_SUPPRESSION)
+    defaulted = False
+    for rule in rules:
+        last = rule is rules[-1]
         start = dt.datetime.utcnow()
         try:
             register_data_views(spark, store)
@@ -49,9 +55,15 @@ def main(
                     "suppression_rule": F.lit(rule.name),
                 },
                 when_not_matched_insert=False,
+                when_not_matched_by_source=(
+                    {"suppressed": F.coalesce(F.col("suppressed"), F.lit(False))}
+                    if last
+                    else None
+                ),
             )
             counts = {"suppressed": n["updated"]}
             err = None
+            defaulted = last
         except Exception as e:
             counts, err = None, e
         results.append(
@@ -66,8 +78,8 @@ def main(
                 error=err,
             )
         )
-    # default the rest to not-suppressed (:33-38)
-    store.update(
-        "alerts", F.col("suppressed").isNull(), {"suppressed": F.lit(False)}
-    )
+    if not defaulted:  # default the rest to not-suppressed (:33-38)
+        store.update(
+            "alerts", F.col("suppressed").isNull(), {"suppressed": F.lit(False)}
+        )
     return results

@@ -1,7 +1,12 @@
 """Run/query metadata recording (db.record_metadata, db.py:556-598).
 
 Error quarantine is a core product behavior (SURVEY §4): a failing
-rule writes an ERROR metadata row and the run continues."""
+rule writes an ERROR metadata row and the run continues.
+
+Each record is one ``(event_time, v)`` row appended to the table. The
+row is built with ``store.local_frame``, so the append is one JVM-only
+job (no Python worker), and ``event_time`` is the naive ``end`` read
+in the session time zone, whatever the process's local zone."""
 
 from __future__ import annotations
 
@@ -11,7 +16,7 @@ import traceback
 
 from pyspark.sql import functions as F
 
-from snowalert_spark.store import ResultsStore
+from snowalert_spark.store import ResultsStore, local_frame
 
 
 def record(
@@ -44,8 +49,8 @@ def record(
             ),
             "EXCEPTION_ONLY": str(error),
         }
-    df = store.spark.createDataFrame(
-        [(end, json.dumps(v, default=str))], store.schema(table)
+    df = local_frame(
+        store.spark, [(end, json.dumps(v, default=str))], store.schema(table)
     )
     store.append(table, df)
     return v

@@ -7,7 +7,8 @@ nulls-omitted) JSON of the row's IDENTITY or its canonical key subset
 (db.py:465-492) — stable across runs for cross-day dedupe/suppression.
 A 1-day alert_time cutoff applies when the rule exposes alert_time
 (db.py:491,499). Suppressions then flag by id and default the rest to
-false."""
+false, the default riding on the last suppression's MERGE (see
+``alert_suppressions``)."""
 
 from __future__ import annotations
 
@@ -137,7 +138,10 @@ def suppress(
     """violation_suppressions_runner.py:15-28 analog."""
     run_id = run_id or uuid.uuid4().hex
     results = []
-    for rule in registry.load_rules(VIOLATION_SUPPRESSION):
+    rules = registry.load_rules(VIOLATION_SUPPRESSION)
+    defaulted = False
+    for rule in rules:
+        last = rule is rules[-1]
         start = dt.datetime.utcnow()
         try:
             store.read("violations").createOrReplaceTempView("data_violations")
@@ -152,8 +156,14 @@ def suppress(
                     "suppression_rule": F.lit(rule.name),
                 },
                 when_not_matched_insert=False,
+                when_not_matched_by_source=(
+                    {"suppressed": F.coalesce(F.col("suppressed"), F.lit(False))}
+                    if last
+                    else None
+                ),
             )
             counts, err = {"suppressed": n["updated"]}, None
+            defaulted = last
         except Exception as e:
             counts, err = None, e
         results.append(
@@ -168,7 +178,8 @@ def suppress(
                 error=err,
             )
         )
-    store.update(
-        "violations", F.col("suppressed").isNull(), {"suppressed": F.lit(False)}
-    )
+    if not defaulted:
+        store.update(
+            "violations", F.col("suppressed").isNull(), {"suppressed": F.lit(False)}
+        )
     return results

@@ -19,6 +19,14 @@ plan — scan the version it read, join, write the next version — run by
 the write itself. Nothing is cached and nothing is counted up front:
 the returned row counts come from a ``pyspark.sql.Observation`` on the
 frame being written, which Spark fills during that same write job.
+A merge's ``when_not_matched_by_source`` map (SQL ``WHEN NOT MATCHED BY
+SOURCE``) updates target-only rows in that same pass, so a MERGE
+followed by an UPDATE of the rows it did not match publishes once.
+
+Frames built on the driver (metadata rows, dispatcher results, the
+empty frame of an absent table) go through ``local_frame``: an Arrow
+table handed straight to the JVM, so writing them starts no Python
+worker, and naive datetimes are read in the session time zone.
 
 100 TB note: rewriting a whole results table per merge is the
 reference's own semantic (it rewrites matched rows warehouse-side),
@@ -36,11 +44,30 @@ import shutil
 from collections.abc import Callable
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from snowalert_spark.schema import RESULT_TABLES
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small driver-built frame as an Arrow table typed by ``schema``.
+
+    ``spark.createDataFrame(list)`` ships rows through a ``PythonRDD``,
+    so every job over the frame starts Python workers; an Arrow table
+    goes to the JVM as record batches instead. Timestamps are typed
+    tz-naive, so Spark reads naive datetimes as wall-clock time in the
+    session time zone (not the Python process's local zone)."""
+    arrow_schema = to_arrow_schema(schema, timestamp_utc=False)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def merge_plan(
@@ -50,6 +77,7 @@ def merge_plan(
     schema: T.StructType,
     when_matched: dict[str, Column] | None,
     when_not_matched_insert: bool,
+    when_not_matched_by_source: dict[str, Column] | None = None,
 ) -> tuple[DataFrame, Observation]:
     """The MERGE INTO statement as one lazy frame, shared by both stores.
 
@@ -57,7 +85,8 @@ def merge_plan(
     ``target`` on ``on`` (key names, a Column, or a function
     ``(target, source) -> Column``). The result has ``schema``'s
     columns: matched rows take ``when_matched`` updates, target-only
-    rows stay as-is, and source-only rows are inserted when
+    rows take ``when_not_matched_by_source`` updates (as-is when
+    absent), and source-only rows are inserted when
     ``when_not_matched_insert`` — otherwise the join is a left join, so
     no source-only row exists. The Observation yields
     ``{"updated", "inserted"}`` once the frame has been written."""
@@ -81,10 +110,11 @@ def merge_plan(
         F.count_if(~has_tgt).alias("inserted"),
     )
     upd = when_matched or {}
+    by_src = when_not_matched_by_source or {}
     in_cols = set(incoming.columns)
     cols = [
         F.when(matched, upd.get(f.name, F.col(f.name)))
-        .when(has_tgt, F.col(f.name))
+        .when(has_tgt, by_src.get(f.name, F.col(f.name)))
         .otherwise(F.col(f"src_{f.name}") if f.name in in_cols else F.lit(None))
         .cast(f.dataType)
         .alias(f.name)
@@ -133,7 +163,7 @@ class ResultsStore:
     def read(self, table: str) -> DataFrame:
         cur = self._current(table)
         if cur is None:
-            return self.spark.createDataFrame([], self.schema(table))
+            return local_frame(self.spark, [], self.schema(table))
         return self.spark.read.schema(self.schema(table)).parquet(cur)
 
     def _align(self, table: str, df: DataFrame) -> DataFrame:
@@ -224,6 +254,7 @@ class ResultsStore:
         when_matched: dict[str, Column] | None = None,
         when_not_matched_insert: bool = True,
         partition_filter: Column | None = None,
+        when_not_matched_by_source: dict[str, Column] | None = None,
     ) -> dict[str, int]:
         """Join-based MERGE, committed in one pass (see ``merge_plan``):
 
@@ -238,9 +269,14 @@ class ResultsStore:
         - ``partition_filter``: target rows NOT satisfying it are
           guaranteed unmatched and carried over without joining — the
           partition-pruned rewrite path at scale.
+        - ``when_not_matched_by_source``: updates for the target rows
+          no source row matched (SQL WHEN NOT MATCHED BY SOURCE). Not
+          combinable with ``partition_filter`` (ValueError): the
+          carried-over rows would silently miss it.
 
-        Returns {"updated": n, "inserted": n}. The version read, the
-        join and the write of the next version are one Spark job
+        Returns {"updated": n, "inserted": n}; ``updated`` counts
+        matched rows only. The version read, the join and the write
+        of the next version are one Spark job
         (plus the join's shuffle stages): nothing is cached, and the
         counts are observed on the joined rows as they are written.
 
@@ -249,6 +285,11 @@ class ResultsStore:
         if another writer got there first — one writer wins, the other
         discards cleanly and can re-run.
         """
+        if when_not_matched_by_source and partition_filter is not None:
+            raise ValueError(
+                f"upsert({table!r}): when_not_matched_by_source would miss "
+                "the rows outside partition_filter"
+            )
         vs0 = self._versions(table)
         base_version = vs0[-1] if vs0 else -1
         target = self.read(table)
@@ -258,7 +299,13 @@ class ResultsStore:
         else:
             hot, cold = target, None
         result, obs = merge_plan(
-            hot, incoming, on, self.schema(table), when_matched, when_not_matched_insert
+            hot,
+            incoming,
+            on,
+            self.schema(table),
+            when_matched,
+            when_not_matched_insert,
+            when_not_matched_by_source,
         )
         if cold is not None:
             result = result.unionByName(cold)

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from snowalert_spark.schema import RESULT_TABLES
-from snowalert_spark.store import ConcurrentWriteError, merge_plan
+from snowalert_spark.store import ConcurrentWriteError, local_frame, merge_plan
 
 TIME_COLS = {
     "alerts": "event_time",
@@ -99,7 +99,7 @@ class PartitionedResultsStore:
             parts = [p for p in parts if p in set(dates)]
         paths = [p for p in (self._current(table, d) for d in parts) if p]
         if not paths:
-            return self.spark.createDataFrame([], self.schema(table))
+            return local_frame(self.spark, [], self.schema(table))
         return self.spark.read.schema(self.schema(table)).parquet(*paths)
 
     # -- write -----------------------------------------------------------
@@ -184,6 +184,7 @@ class PartitionedResultsStore:
         window_from: dt.datetime | None = None,
         window_to: dt.datetime | None = None,
         prune_to_window: bool = False,
+        when_not_matched_by_source: dict[str, Column] | None = None,
     ) -> dict[str, int]:
         """Join-merge against hot partitions only.
 
@@ -196,7 +197,17 @@ class PartitionedResultsStore:
         those derive hot dates from the window args alone, or fall back
         to every partition when no window is given (correct, just not
         pruned). ``__date`` for publishing is always computed on the
-        merged output, which carries the full table schema."""
+        merged output, which carries the full table schema.
+
+        ``when_not_matched_by_source`` (updates for target rows no
+        source row matched) makes every partition hot, and raises
+        ValueError with a merge window: the pruned partitions would
+        silently miss it."""
+        if when_not_matched_by_source and (window_from or window_to):
+            raise ValueError(
+                f"upsert({table!r}): when_not_matched_by_source would miss "
+                "the partitions outside the merge window"
+            )
         tc = TIME_COLS[table]
         has_time = tc in incoming.columns
         incoming = incoming.cache()
@@ -223,6 +234,8 @@ class PartitionedResultsStore:
                 if self._current(table, d.isoformat()):
                     hot.add(d.isoformat())
                 d += dt.timedelta(days=1)
+        if when_not_matched_by_source:
+            hot |= set(self._partitions(table))
         hot = sorted(hot)
         # lost-update guard: remember each hot partition's version as
         # read; publish CAS-fails if a concurrent writer moved it.
@@ -242,6 +255,7 @@ class PartitionedResultsStore:
             self.schema(table),
             when_matched,
             when_not_matched_insert,
+            when_not_matched_by_source,
         )
         merged = self._with_date(table, out).cache()
         for date in {d for (d,) in merged.select("__date").distinct().collect()} | set(

@@ -17,6 +17,8 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import json
+import os
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -304,3 +306,190 @@ def test_sp1513_array_actions_correlate(spark, store):
     assert n == 2
     cids = {r.alert.TITLE: r.correlation_id for r in store.read("alerts").collect()}
     assert cids["A1"] == cids["A2"] and cids["A1"] is not None
+
+
+# -- driver-built frames: Arrow to the JVM, session time zone ---------------
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def _capturing(store, method):
+    """Wrap ``store.<method>`` to keep the frame each call is handed."""
+    frames, inner = [], getattr(store, method)
+
+    def call(table, df, *a, **kw):
+        frames.append(df)
+        return inner(table, df, *a, **kw)
+
+    setattr(store, method, call)
+    return frames
+
+
+def test_metadata_event_time_follows_session_zone(store):
+    """A naive UTC ``end`` is stored as the same wall-clock time in the
+    session zone, whatever the Python process's local zone is."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        v = metadata.record(
+            store, "run_metadata", "r1", end=dt.datetime(2024, 7, 1, 12, 0, 0)
+        )
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    (row,) = store.read("run_metadata").selectExpr(
+        "cast(event_time as string) AS t"
+    ).collect()
+    assert row.t == v["END_TIME"].replace("T", " ") == "2024-07-01 12:00:00"
+
+
+def test_metadata_frame_stays_jvm_side(store):
+    frames = _capturing(store, "append")
+    metadata.record(store, "query_metadata", "r1", query_name="q")
+    (df,) = frames
+    assert "PythonRDD" not in _lineage(df)
+
+
+def test_dispatcher_update_frame_stays_jvm_side(spark, store, registry):
+    _run_alerts(spark, store, registry)
+    H.register("jira", H.MemoryTicketHandler().handle)
+    frames = _capturing(store, "upsert")
+    assert alert_dispatcher.main(spark, store) == 1
+    (df,) = frames
+    assert "PythonRDD" not in _lineage(df)
+    assert df.schema.simpleString() == "struct<aid:string,handled:string,ticket:string>"
+
+
+# -- suppression runners: the default-false UPDATE rides on the last MERGE --
+
+SUPPRESSIONS = {
+    "alerts": (alert_suppressions.main, "_ALERT_SUPPRESSION", "data_alerts",
+               "alert.ALERT_ID"),
+    "violations": (violation_queries.suppress, "_VIOLATION_SUPPRESSION",
+                   "data_violations", "id"),
+}
+
+
+def _seed(spark, store, table):
+    """Ids a, b, c unsuppressed; d suppressed by an earlier run."""
+    rows = [(i, None, None) for i in "abc"] + [("d", True, "_OLD")]
+    if table == "alerts":
+        data = [
+            ({"ALERT_ID": i, "TITLE": i}, T0, T0, None, s, r, 1, None, None)
+            for i, s, r in rows
+        ]
+    else:
+        data = [("{}", i, T0, None, s, r) for i, s, r in rows]
+    store.overwrite(table, spark.createDataFrame(data, store.schema(table)))
+
+
+def _flags(store, table):
+    key = SUPPRESSIONS[table][3]
+    return {
+        r.k: (r.suppressed, r.suppression_rule)
+        for r in store.read(table)
+        .select(F.col(key).alias("k"), "suppressed", "suppression_rule")
+        .collect()
+    }
+
+
+def _rule_sql(table, where):
+    _, _, view, key = SUPPRESSIONS[table]
+    return f"SELECT {key} AS id FROM {view} WHERE suppressed IS NULL AND {where}"
+
+
+def _suppress(spark, store, table, rules):
+    """Run the table's suppression runner over ``rules`` (name → SQL);
+    returns its results and the number of versions it published."""
+    run, suffix, _, _ = SUPPRESSIONS[table]
+    reg = RuleRegistry()
+    for name, sql in rules.items():
+        reg.create(name + suffix, sql=sql, comment=name)
+    v0 = store._versions(table)[-1]
+    res = run(spark, store, reg)
+    return res, store._versions(table)[-1] - v0
+
+
+@pytest.mark.parametrize("table", list(SUPPRESSIONS))
+def test_suppression_fold_one_rule_publishes_once(spark, tmp_path, table):
+    """One rule: one publish, with the rows the MERGE-then-UPDATE
+    sequence leaves; the recorded count is the matched rows only."""
+    stores = [ResultsStore(spark, str(tmp_path / s)) for s in ("fold", "ref")]
+    for s in stores:
+        _seed(spark, s, table)
+    fold, ref = stores
+    _, sfx, view, key = SUPPRESSIONS[table]
+    sql = _rule_sql(table, f"{key} = 'a'")
+    res, published = _suppress(spark, fold, table, {"_S1": sql})
+    assert published == 1
+    assert res[0]["ROW_COUNT"] == {"suppressed": 1}
+
+    ref.read(table).createOrReplaceTempView(view)
+    ref.upsert(
+        table,
+        spark.sql(sql).select(F.col("id").alias("sid")),
+        on=lambda t, s: F.col(key) == F.col("src_sid"),
+        when_matched={
+            "suppressed": F.lit(True),
+            "suppression_rule": F.lit("_S1" + sfx),
+        },
+        when_not_matched_insert=False,
+    )
+    ref.update(table, F.col("suppressed").isNull(), {"suppressed": F.lit(False)})
+    assert sorted(fold.read(table).collect()) == sorted(ref.read(table).collect())
+    assert _flags(fold, table)["b"] == (False, None)
+
+
+@pytest.mark.parametrize("table", list(SUPPRESSIONS))
+def test_suppression_fold_second_rule_sees_first_rules_nulls(spark, store, table):
+    _seed(spark, store, table)
+    key, sfx = SUPPRESSIONS[table][3], SUPPRESSIONS[table][1]
+    res, published = _suppress(
+        spark,
+        store,
+        table,
+        {"_S1": _rule_sql(table, f"{key} = 'a'"), "_S2": _rule_sql(table, "true")},
+    )
+    assert published == 2
+    assert [r["ROW_COUNT"] for r in res] == [{"suppressed": 1}, {"suppressed": 2}]
+    assert _flags(store, table) == {
+        "a": (True, "_S1" + sfx),
+        "b": (True, "_S2" + sfx),
+        "c": (True, "_S2" + sfx),
+        "d": (True, "_OLD"),
+    }
+
+
+@pytest.mark.parametrize("table", list(SUPPRESSIONS))
+def test_suppression_fold_last_rule_error_still_defaults(spark, store, table):
+    _seed(spark, store, table)
+    key, sfx = SUPPRESSIONS[table][3], SUPPRESSIONS[table][1]
+    broken = _rule_sql(table, "raise_error('boom') IS NULL")
+    res, published = _suppress(
+        spark, store, table, {"_S1": _rule_sql(table, f"{key} = 'a'"), "_S2": broken}
+    )
+    assert published == 2  # the first rule's merge, then the fallback UPDATE
+    assert "boom" in res[1]["ERROR"]["EXCEPTION_ONLY"]
+    assert res[1].get("ROW_COUNT") is None
+    assert _flags(store, table) == {
+        "a": (True, "_S1" + sfx),
+        "b": (False, None),
+        "c": (False, None),
+        "d": (True, "_OLD"),
+    }
+
+
+@pytest.mark.parametrize("table", list(SUPPRESSIONS))
+def test_suppression_fold_without_rules_still_defaults(spark, store, table):
+    _seed(spark, store, table)
+    res, published = _suppress(spark, store, table, {})
+    assert res == [] and published == 1
+    assert {k: s for k, (s, _) in _flags(store, table).items()} == {
+        "a": False, "b": False, "c": False, "d": True,
+    }

@@ -10,6 +10,7 @@ import uuid
 import pyspark.sql.functions as F
 import pytest
 
+from snowalert_spark.schema import RESULT_TABLES
 from snowalert_spark.store import ResultsStore
 
 
@@ -291,3 +292,45 @@ def test_commit_job_budgets(store, spark):
     )
     jobs = (keyed, theta, update)
     assert max(keyed, theta) <= UPSERT_JOBS and update <= UPDATE_JOBS, jobs
+
+
+def test_upsert_when_not_matched_by_source(store, spark):
+    """Target rows no source row matched take the by-source updates in
+    the same publish; ``updated`` still counts matched rows only."""
+    store.overwrite("violations", _violations(spark, ["a", "b", "c"]))
+    v0 = store._versions("violations")[-1]
+    n = _returns(
+        lambda: store.upsert(
+            "violations",
+            _violations(spark, ["a", "zz"]),
+            on=["id"],
+            when_matched={"suppressed": F.lit(True)},
+            when_not_matched_insert=False,
+            when_not_matched_by_source={
+                "suppressed": F.coalesce(F.col("suppressed"), F.lit(False))
+            },
+        )
+    )
+    assert n == {"updated": 1, "inserted": 0}
+    assert store._versions("violations")[-1] == v0 + 1
+    got = {r.id: r.suppressed for r in store.read("violations").collect()}
+    assert got == {"a": True, "b": False, "c": False}
+    with pytest.raises(ValueError, match="partition_filter"):
+        store.upsert(
+            "violations",
+            _violations(spark, ["a"]),
+            on=["id"],
+            partition_filter=_hot(),
+            when_not_matched_by_source={"suppressed": F.lit(False)},
+        )
+    assert store._versions("violations")[-1] == v0 + 1
+
+
+def test_read_of_absent_table_stays_jvm_side(store):
+    """The empty frame of an absent table is an Arrow relation: its
+    lineage has no PythonRDD, so jobs over it start no Python worker."""
+    for table, schema in RESULT_TABLES.items():
+        df = store.read(table)
+        assert df.schema == schema, table
+        assert df.count() == 0, table
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()

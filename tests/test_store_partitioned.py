@@ -8,7 +8,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
-from snowalert_spark.schema import ALERTS
+from snowalert_spark.schema import ALERTS, RESULT_TABLES
 from snowalert_spark.store_partitioned import PartitionedResultsStore
 
 
@@ -155,3 +155,54 @@ def test_id_only_upsert_with_window_requires_opt_in(pstore, spark):
         prune_to_window=True,
     )
     assert n["updated"] == 1
+
+
+def test_not_matched_by_source_reaches_every_partition(pstore, spark):
+    """A by-source default must reach partitions the incoming rows do
+    not touch: every partition is hot for such a merge."""
+    pstore.append("alerts", _alert(spark, "h1", "d", 1))
+    pstore.append("alerts", _alert(spark, "h10", "d", 10))
+    before = pstore.touched_partitions("alerts")
+    n = pstore.upsert(
+        "alerts",
+        _alert(spark, "h10", "d", 10),
+        on=_match(dt.datetime(2024, 1, 1)),
+        when_matched={"suppressed": F.lit(True)},
+        when_not_matched_insert=False,
+        when_not_matched_by_source={
+            "suppressed": F.coalesce(F.col("suppressed"), F.lit(False))
+        },
+    )
+    assert n == {"updated": 1, "inserted": 0}
+    rows = {r.alert.OBJECT: r.suppressed for r in pstore.read("alerts").collect()}
+    assert rows == {"h1": False, "h10": True}
+    after = pstore.touched_partitions("alerts")
+    assert all(after[d] == before[d] + 1 for d in before)
+
+
+def test_not_matched_by_source_refuses_window_pruning(pstore, spark):
+    """With a merge window the cold partitions would silently miss the
+    by-source default, so the combination is refused before any write."""
+    pstore.append("alerts", _alert(spark, "h1", "d", 1))
+    before = pstore.touched_partitions("alerts")
+    frm = dt.datetime(2024, 1, 10)
+    with pytest.raises(ValueError, match="when_not_matched_by_source"):
+        pstore.upsert(
+            "alerts",
+            _alert(spark, "h10", "d", 10),
+            on=_match(frm),
+            window_from=frm,
+            window_to=dt.datetime(2024, 1, 11),
+            when_not_matched_by_source={"suppressed": F.lit(False)},
+        )
+    assert pstore.touched_partitions("alerts") == before
+
+
+def test_read_of_absent_table_stays_jvm_side(pstore):
+    """Same contract as ``ResultsStore.read``: the empty frame keeps the
+    table's schema and its lineage has no PythonRDD."""
+    for table, schema in RESULT_TABLES.items():
+        df = pstore.read(table)
+        assert df.schema == schema, table
+        assert df.count() == 0, table
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
