@@ -250,6 +250,23 @@ def _compact_expired_state(
                 shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
+def _unpersisting(body):
+    """``foreachBatch`` function running ``body(batch, batch_id,
+    cached)``: every frame the body appends to ``cached`` is
+    unpersisted when the micro-batch ends, whether it succeeded or
+    raised, so a failed batch leaks no cached blocks."""
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        cached: list[DataFrame] = []
+        try:
+            body(batch, batch_id, cached)
+        finally:
+            for df in cached:
+                df.unpersist()
+
+    return process
+
+
 def neardup_stream_ingest(
     spark: SparkSession,
     src_path: str,
@@ -277,15 +294,26 @@ def neardup_stream_ingest(
     against accumulated state is not expressible with the built-in
     streaming dedup operators):
 
-    1. in-batch pass: exact-text dups and MinHash near-dup pairs
-       inside the batch keep the smallest ``id_col`` per group;
-    2. batch-vs-state: the batch's band buckets equi-join the
-       persisted base buckets (band, band_hash) for candidates — the
-       accumulated corpus is NEVER re-shingled or all-paired — then
-       candidates are exact-verified against the persisted base
-       shingles; docs with a verified match are dropped;
-    3. survivors append to ``dst_path`` and their shingles + buckets
-       append to the state store, stamped with the micro-batch id.
+    1. exact-text dups inside the batch keep the smallest ``id_col``
+       (one window over ``md5(text)``);
+    2. the batch is shingled and band-bucketed ONCE; both frames are
+       cached and feed every step below — the accumulated corpus is
+       NEVER re-shingled or all-paired;
+    3. one candidate join: the batch buckets equi-join, on
+       (band, band_hash), the batch's own buckets together with the
+       persisted state buckets, each row tagged with its side; a
+       candidate counts when it comes from state, or from the batch
+       with a smaller id;
+    4. one verification: candidates count shared shingles against the
+       batch's own shingles together with the persisted state
+       shingles, and set sizes are taken per (id, side) — so a doc
+       re-delivered under an id already in state never mixes its
+       shingles with the stored ones; a doc with any verified match
+       (shingle-Jaccard >= ``threshold``) is dropped;
+    5. survivors publish to ``dst_path``, and the batch's cached
+       shingle and bucket rows of the survivors append to the state
+       store, stamped with the micro-batch id (buckets depend only on
+       a doc's own shingles, so no signature is recomputed).
 
     State is bounded: with ``retention_batches=N`` only state rows
     from the last N micro-batches participate in (and survive)
@@ -329,19 +357,21 @@ def neardup_stream_ingest(
 
     sh_dir = os.path.join(state_dir, "base_shingles")
     bk_dir = os.path.join(state_dir, "base_buckets")
+    sig_aggs = _signature_aggs(n_hashes)  # built once per stream
 
     def _buckets(sh):
         sigs = (
-            sh.select(id_col, base_hash32(F.col("s")).alias("h"))
-            .groupBy(id_col)
-            .agg(*_signature_aggs(n_hashes))
+            sh.select(F.col(id_col).alias("doc_id"), base_hash32(F.col("s")).alias("h"))
+            .groupBy("doc_id")
+            .agg(*sig_aggs)
         )
-        return minhash_band_buckets(sigs, n_hashes, rows_per_band)
+        return minhash_band_buckets(sigs, n_hashes, rows_per_band).withColumnRenamed(
+            "doc_id", id_col
+        )
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        cached = [batch.cache()]
-        batch = cached[0]
-        # -- 1. in-batch dedup (exact, then near) -----------------------
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
+        # -- 1. in-batch exact dups keep the smallest id (cached: it
+        # feeds the shingles and the survivors' write) ---------------------
         keep = batch.withColumn(
             "_rk",
             F.row_number().over(
@@ -349,92 +379,102 @@ def neardup_stream_ingest(
             ),
         ).filter(F.col("_rk") == 1).drop("_rk").cache()
         cached.append(keep)
+        # -- 2. shingle and bucket the batch once --------------------------
         sh = doc_shingles(
             keep.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
             k,
         ).withColumnRenamed("doc_id", id_col).cache()
-        cached.append(sh)
-        from snowalert_spark.functions.dedup import minhash_lsh_pairs
+        bk = _buckets(sh).cache()
+        cached += [sh, bk]
 
-        near = minhash_lsh_pairs(
-            keep.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-            threshold=threshold, n_hashes=n_hashes,
-            rows_per_band=rows_per_band, k=k,
-        ).select(F.col("doc_b").alias(id_col)).distinct()
-        keep = keep.join(near, id_col, "left_anti").cache()
-        cached.append(keep)
-        sh = sh.join(keep.select(id_col), id_col, "left_semi")
-
-        # -- 2. batch vs accumulated state ------------------------------
+        # -- 3. one candidate join: the batch's smaller ids and the
+        # accumulated state together, each row tagged with its side ------
         base_sh = _read_batched_state(
             spark, sh_dir, f"{id_col} long, s string, batch_id long",
             batch_id, retention_batches,
-        )
+        ).drop("batch_id")
         base_bk = _read_batched_state(
             spark, bk_dir,
             f"{id_col} long, band int, band_hash string, batch_id long",
             batch_id, retention_batches,
+        ).drop("batch_id")
+        other_bk = bk.withColumn("in_state", F.lit(False)).unionByName(
+            base_bk.withColumn("in_state", F.lit(True))
         )
-        bk = _buckets(sh)
+        other_sh = sh.withColumn("in_state", F.lit(False)).unionByName(
+            base_sh.withColumn("in_state", F.lit(True))
+        )
         cands = (
             bk.alias("a")
             .join(
-                base_bk.alias("b"),
+                other_bk.alias("b"),
                 (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_hash") == F.col("b.band_hash")),
+                & (F.col("a.band_hash") == F.col("b.band_hash"))
+                & (F.col("b.in_state") | (F.col(f"b.{id_col}") < F.col(f"a.{id_col}"))),
             )
             .select(
                 F.col(f"a.{id_col}").alias(id_col),
                 F.col(f"b.{id_col}").alias("dup_of"),
+                F.col("b.in_state").alias("in_state"),
             )
             .distinct()
         )
-        na_ = sh.groupBy(id_col).agg(F.count("*").alias("na"))
-        nb_ = (
-            base_sh.groupBy(id_col).agg(F.count("*").alias("nb"))
-            .withColumnRenamed(id_col, "dup_of")
+        # -- 4. one verification; sizes per (id, side) keep a same-id
+        # re-delivery apart from its stored namesake ----------------------
+        sizes = other_sh.groupBy(id_col, "in_state").agg(F.count("*").alias("n"))
+        na_ = sizes.filter(~F.col("in_state")).select(id_col, F.col("n").alias("na"))
+        nb_ = sizes.select(
+            F.col(id_col).alias("dup_of"), "in_state", F.col("n").alias("nb")
         )
         common = (
             cands.join(sh.select(id_col, F.col("s").alias("sa")), id_col)
             .join(
-                base_sh.select(F.col(id_col).alias("dup_of2"), F.col("s").alias("sb")),
-                (F.col("dup_of") == F.col("dup_of2")) & (F.col("sa") == F.col("sb")),
+                other_sh.select(
+                    F.col(id_col).alias("dup_of2"),
+                    F.col("in_state").alias("in_state2"),
+                    F.col("s").alias("sb"),
+                ),
+                (F.col("dup_of") == F.col("dup_of2"))
+                & (F.col("in_state") == F.col("in_state2"))
+                & (F.col("sa") == F.col("sb")),
             )
-            .groupBy(id_col, "dup_of")
+            .groupBy(id_col, "dup_of", "in_state")
             .agg(F.count("*").alias("c"))
         )
         j = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
         dups = (
             common.join(na_, id_col)
-            .join(nb_, "dup_of")
+            .join(nb_, ["dup_of", "in_state"])
             .filter(quantize(j, 6) >= threshold)
             .select(id_col)
-            .distinct()
+            .cache()
         )
-        survivors = keep.join(dups, id_col, "left_anti").cache()
-        cached.append(survivors)
+        cached.append(dups)
 
-        # -- 3. publish survivors + their state: one batch_id={b}
+        # -- 5. publish survivors + their state: one batch_id={b}
         # partition directory per sink, per-directory OVERWRITE, so a
-        # replayed batch rewrites exactly its own output (idempotent)
-        survivors.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
-        surv_sh = sh.join(survivors.select(id_col), id_col, "left_semi")
-        surv_sh.write.mode("overwrite").parquet(_batch_dir(sh_dir, batch_id))
-        _buckets(surv_sh).write.mode("overwrite").parquet(
+        # replayed batch rewrites exactly its own output (idempotent).
+        # sh and bk hold keep's ids only, so the anti-join on dups
+        # leaves exactly the survivors' rows
+        keep.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
+            _batch_dir(dst_path, batch_id)
+        )
+        sh.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
+            _batch_dir(sh_dir, batch_id)
+        )
+        bk.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
             _batch_dir(bk_dir, batch_id)
         )
         # drop expired state directories so the stores stay bounded
         if retention_batches is not None:
             _compact_expired_state((sh_dir, bk_dir), batch_id, retention_batches)
-        for df in cached:
-            df.unpersist()
 
     reader = spark.readStream.format(fmt).schema(schema)
     if fmt == "csv":
         reader = reader.option("header", "true")
     q = (
         reader.load(src_path)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(_unpersisting(process))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -507,9 +547,9 @@ def neardup_embedding_stream_ingest(
             vecs, n_planes, bands, dim, id_col, vec_col
         ).withColumnRenamed("vid", id_col)
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        cached = [batch.cache()]
-        batch = cached[0]
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
+        batch = batch.cache()
+        cached.append(batch)
         # -- 1. in-batch near-dup: keep the smaller id per pair ----------
         near = (
             cosine_pairs_rplsh(
@@ -574,14 +614,12 @@ def neardup_embedding_stream_ingest(
         # drop expired state directories so the stores stay bounded
         if retention_batches is not None:
             _compact_expired_state((vec_dir, bk_dir), batch_id, retention_batches)
-        for df in cached:
-            df.unpersist()
 
     q = (
         spark.readStream.format(fmt)
         .schema(schema)
         .load(src_path)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(_unpersisting(process))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -662,9 +700,9 @@ def neardup_media_stream_ingest(
     hash_schema = f"{id_col} long, bd array<int>, batch_id long"
     key_schema = f"{id_col} long, ci int, kv long, batch_id long"
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        cached = [batch.cache()]
-        batch = cached[0]
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
+        batch = batch.cache()
+        cached.append(batch)
         hashed = fingerprint(batch).select(
             id_col,
             F.array(*[F.col(f"band_{r}") for r in range(8)]).alias("bd"),
@@ -732,14 +770,12 @@ def neardup_media_stream_ingest(
         ).parquet(_batch_dir(key_dir, batch_id))
         if retention_batches is not None:
             _compact_expired_state((hash_dir, key_dir), batch_id, retention_batches)
-        for df in cached:
-            df.unpersist()
 
     q = (
         spark.readStream.format(fmt)
         .schema(schema)
         .load(src_path)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(_unpersisting(process))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -1083,7 +1119,7 @@ def substring_stream_ingest(
     )
     state.ensure()
 
-    def process(batch: DataFrame, batch_id: int) -> None:
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
         if (
             compact_every
             and retention_batches is None
@@ -1091,8 +1127,8 @@ def substring_stream_ingest(
             and batch_id % compact_every == 0
         ):
             state.fold(batch_id)
-        cached = [batch.cache()]
-        batch = cached[0]
+        batch = batch.cache()
+        cached.append(batch)
         wins = _window_fingerprints(
             batch.select(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -1207,14 +1243,12 @@ def substring_stream_ingest(
         )
         if retention_batches is not None:
             state.expire(batch_id, retention_batches)
-        for df in cached:
-            df.unpersist()
 
     q = (
         spark.readStream.format(fmt)
         .schema(schema)
         .load(src_path)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(_unpersisting(process))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -1360,7 +1394,7 @@ def curation_stream_ingest(
         )
         bench.count()
 
-    def process(batch: DataFrame, batch_id: int) -> None:
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
         has_src = source_col in batch.columns
         src = (
             F.col(source_col) if has_src else F.lit("default")
@@ -1399,28 +1433,26 @@ def curation_stream_ingest(
                 X.curation_outcome(langs, contaminated), F.lit("kept")
             ).alias("outcome"),
         ).cache()
-        try:
-            out.filter(F.col("outcome") == "kept").drop("outcome").write.mode(
-                "overwrite"
-            ).parquet(_batch_dir(dst_path, batch_id))
-            if audit_dir is not None:
-                (
-                    out.groupBy("source", "outcome")
-                    .agg(
-                        F.count(F.lit(1)).alias("n_docs"),
-                        F.sum("n_tokens").alias("n_tokens"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(_batch_dir(audit_dir, batch_id))
+        cached.append(out)
+        out.filter(F.col("outcome") == "kept").drop("outcome").write.mode(
+            "overwrite"
+        ).parquet(_batch_dir(dst_path, batch_id))
+        if audit_dir is not None:
+            (
+                out.groupBy("source", "outcome")
+                .agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum("n_tokens").alias("n_tokens"),
                 )
-        finally:
-            out.unpersist()
+                .write.mode("overwrite")
+                .parquet(_batch_dir(audit_dir, batch_id))
+            )
 
     q = (
         spark.readStream.format(fmt)
         .schema(schema)
         .load(src_path)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(_unpersisting(process))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -1471,35 +1503,25 @@ def semantic_decontam_stream_ingest(
     ).cache()
     ev.count()
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        cached = [batch.cache()]
-        batch = cached[0]
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
+        batch = batch.cache()
+        cached.append(batch)
         scores = decontaminate_semantic(
             batch, ev, threshold, id_col=id_col, vec_col=vec_col
         ).cache()
         cached.append(scores)
-        try:
-            if audit_dir is not None:
-                scores.write.mode("overwrite").parquet(
-                    _batch_dir(audit_dir, batch_id)
-                )
-            keeps = batch.join(
-                scores.filter("contaminated").select(id_col),
-                id_col,
-                "left_anti",
-            )
-            keeps.write.mode("overwrite").parquet(
-                _batch_dir(dst_path, batch_id)
-            )
-        finally:
-            for df in cached:
-                df.unpersist()
+        if audit_dir is not None:
+            scores.write.mode("overwrite").parquet(_batch_dir(audit_dir, batch_id))
+        keeps = batch.join(
+            scores.filter("contaminated").select(id_col), id_col, "left_anti"
+        )
+        keeps.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
 
     q = (
         spark.readStream.format(fmt)
         .schema(schema)
         .load(src_path)
-        .writeStream.foreachBatch(process)
+        .writeStream.foreachBatch(_unpersisting(process))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -9,7 +9,8 @@
    directories instead of appending duplicates — and compaction never
    has a lose-the-whole-store window (directory deletes only);
 3. cache hygiene: every frame cached inside process() is unpersisted
-   at batch end (asserted via the storage registry);
+   at batch end, also when the batch raises (asserted via the storage
+   registry);
 4. ``corpus_version`` may not contain ``|`` — evict_stale_models
    splits model_key on the first ``|``, so a version containing one
    would mis-split (rejected at every model-key construction site).
@@ -130,6 +131,58 @@ def test_batch_caches_unpersisted(spark, tmp_path):
     jspark = spark._jsparkSession
     cached = jspark.sharedState().cacheManager().isEmpty()
     assert cached, "cached blocks leaked out of the micro-batch"
+
+
+def _failing_tier_run(spark, tier: str, tmp: str) -> None:
+    """One micro-batch through ``tier`` with ``dst_path`` a regular
+    file, so the survivors' write raises after the batch was cached."""
+    from pyspark.sql import functions as F
+
+    from snowalert_spark import streaming
+
+    dirs = dict(src_path=f"{tmp}/src", dst_path=f"{tmp}/out",
+                checkpoint=f"{tmp}/ckpt", state_dir=f"{tmp}/state")
+    open(dirs["dst_path"], "w").close()
+    if tier == "embedding":
+        _write_json(f"{tmp}/src", [{"vec_id": 1, "embedding": [1.0, 0.0]},
+                                   {"vec_id": 2, "embedding": [0.0, 1.0]}])
+        streaming.neardup_embedding_stream_ingest(
+            spark, **dirs, schema="vec_id long, embedding array<double>",
+            n_planes=8, bands=2, dim=2,
+        )
+    elif tier == "media":
+        _write_json(f"{tmp}/src", [{"media_id": 1, "text": BASE},
+                                   {"media_id": 2, "text": OTHER}])
+        streaming.neardup_media_stream_ingest(
+            spark, **dirs, schema="media_id long, text string",
+            fingerprint=lambda b: b.select(
+                "media_id", *[F.lit(r).alias(f"band_{r}") for r in range(8)]
+            ),
+        )
+    else:
+        _write(f"{tmp}/src", "f1.json", [(1, BASE), (2, OTHER)])
+        ingest = (neardup_stream_ingest if tier == "neardup"
+                  else streaming.substring_stream_ingest)
+        ingest(spark, **dirs, schema=SCHEMA)
+
+
+def _write_json(src, rows):
+    os.makedirs(src, exist_ok=True)
+    with open(os.path.join(src, "f1.json"), "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+
+
+@pytest.mark.parametrize("tier", ["neardup", "embedding", "media", "substring"])
+def test_failed_batch_caches_unpersisted(spark, tmp_path, tier):
+    """A micro-batch that raises unpersists what it cached too: without
+    that, every failed attempt left its cached frames in the session."""
+    from pyspark.errors import StreamingQueryException
+
+    spark.catalog.clearCache()  # isolate from other tests' caches
+    with pytest.raises(StreamingQueryException):
+        _failing_tier_run(spark, tier, str(tmp_path))
+    cached = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert cached, "a failed micro-batch leaked cached blocks"
 
 
 def test_corpus_version_pipe_rejected(spark):

@@ -52,3 +52,50 @@ def test_wide_parent_spread_is_unresolved():
     pairs = _pairs("setup_s", [10, 20, 10, 20], [15, 15, 15, 15])
     m = bench_ab.summarize(pairs, {"name": "setup_s", "better": "lower", "bound": 0.25})
     assert m["within_bound"] and not m["resolved"]
+
+
+def test_claim_needs_nine_in_ten_wins_and_a_gap_over_the_iqr():
+    rule = {"name": "run_s_p50", "better": "lower", "bound": 0.25}
+    parent = [10, 11, 12, 10, 11, 12, 10, 11, 12, 11]
+    m = bench_ab.summarize(_pairs("run_s_p50", parent, [p - 3 for p in parent]), rule)
+    assert bench_ab.claim_met(m, 10)
+    # nine wins of ten pairs still meet it; eight do not
+    nine = [p - 3 for p in parent[:9]] + [13]
+    assert bench_ab.claim_met(bench_ab.summarize(_pairs("run_s_p50", parent, nine), rule), 10)
+    eight = [p - 3 for p in parent[:8]] + [13, 13]
+    assert not bench_ab.claim_met(bench_ab.summarize(_pairs("run_s_p50", parent, eight), rule), 10)
+    # every pair won, but by less than the parent's interquartile range
+    m = bench_ab.summarize(_pairs("run_s_p50", parent, [p - 0.5 for p in parent]), rule)
+    assert m["wins"] == 10 and not bench_ab.claim_met(m, 10)
+    # a pair with a failed side is no win
+    assert not bench_ab.claim_met(m | {"gap_exceeds_parent_iqr": True, "wins": 9}, 11)
+
+
+def test_workloads_interleave_per_seed_and_claim_is_reported(tmp_path, monkeypatch, capsys):
+    import json
+
+    for side in ("parent", "change"):
+        (tmp_path / side).mkdir()
+    (tmp_path / "change" / "BENCHMARK.json").write_text(json.dumps({
+        "command": ["run"], "run_seconds": 1,
+        "end_to_end": [{"name": "run_s_p50", "better": "lower", "bound": 0.25}],
+    }))
+    calls = []
+
+    def fake_run(cmd, cwd, workload, seed, seconds):
+        side = os.path.basename(cwd)
+        calls.append((seed, workload, side))
+        return {"ok": True, "metrics": {"run_s_p50": 10.0 if side == "parent" else 5.0}}
+
+    monkeypatch.setattr(bench_ab, "_run", fake_run)
+    rc = bench_ab.main(["--parent", str(tmp_path / "parent"),
+                        "--change", str(tmp_path / "change"),
+                        "--workload", "a,b", "--seeds", "1-2", "--claim", "run_s_p50"])
+    assert rc == 0
+    assert calls == [(1, "a", "parent"), (1, "a", "change"),
+                     (1, "b", "parent"), (1, "b", "change"),
+                     (2, "a", "change"), (2, "a", "parent"),
+                     (2, "b", "change"), (2, "b", "parent")]
+    reports = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["reports"]
+    assert [(r["workload"], r["pairs"], r["claim_met"]) for r in reports] == [
+        ("a", 2, True), ("b", 2, True)]

@@ -104,28 +104,122 @@ def test_state_bounded_by_retention(spark, tmp_path):
     assert {r["doc_id"] for r in bk.select("doc_id").distinct().collect()} == {3}
 
 
-def test_matches_batch_operator(spark, tmp_path):
-    """The streaming tier must agree with the batch cross-snapshot
-    operator on the same split: survivors = batch minus the docs
-    cross_snapshot_minhash flags against the already-ingested base."""
-    from pyspark.sql import functions as F
+# in-batch chain 1 < 2 < 3: each doc is its predecessor with one end
+# token changed (Jaccard 12/14), so 2 ~ 1 and 3 ~ 2, but 3 vs 1 is
+# 11/15 — a chain the smaller-id rule cuts at both links
+CHAIN = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike november oscar"
+CHAIN2 = CHAIN.rsplit(" ", 1)[0] + " papa"
+CHAIN3 = "quebec " + CHAIN2.split(" ", 1)[1]
+SHORT = "tiny doc"  # fewer than k=3 tokens: no shingles, never a candidate
 
-    from snowalert_spark.functions.dedup import cross_snapshot_minhash
+# split name -> (files in arrival order, surviving ids)
+SPLITS = {
+    "two_files": ([
+        [(1, BASE), (2, OTHER)],
+        [(10, NEAR), (11, "fresh text nothing like anything else "
+                          "in this tiny corpus of documents")],
+    ], [1, 2, 11]),
+    # chain, short docs, exact copies in-batch and across batches, a
+    # same-id re-delivery of near text, and a later exact copy of a doc
+    # the first batch dropped (state holds survivors only)
+    "chain_redelivery_short_exact": ([
+        [(1, CHAIN), (2, CHAIN2), (3, CHAIN3), (4, SHORT), (5, SHORT),
+         (6, BASE), (7, BASE)],
+        [(6, NEAR), (8, BASE), (9, SHORT), (10, CHAIN3), (11, OTHER)],
+    ], [1, 4, 6, 9, 10, 11]),
+}
+
+
+def _batch_operator_survivors(spark, files):
+    """Per file in arrival order: exact-duplicate keep-min-id, then drop
+    ``doc_b`` of every in-batch MinHash pair, then drop what
+    cross_snapshot_minhash flags against earlier files' survivors."""
+    from snowalert_spark.functions.dedup import (
+        cross_snapshot_minhash,
+        exact_dedup,
+        minhash_lsh_pairs,
+    )
+
+    schema = "doc_id long, text string"
+    survivors = []
+    for rows in files:
+        canon = {
+            r["doc_id"]
+            for r in exact_dedup(spark.createDataFrame(rows, schema))
+            .filter("is_canonical").collect()
+        }
+        kept = [(d, t) for d, t in rows if d in canon]
+        batch = spark.createDataFrame(kept, schema)
+        drop = {r["doc_b"] for r in minhash_lsh_pairs(batch, threshold=0.8).collect()}
+        if survivors:
+            base = spark.createDataFrame(survivors, schema)
+            drop |= {
+                r["doc_id"]
+                for r in cross_snapshot_minhash(batch, base, threshold=0.8).collect()
+            }
+        survivors += [(d, t) for d, t in kept if d not in drop]
+    return sorted(d for d, _ in survivors)
+
+
+@pytest.mark.parametrize("split", sorted(SPLITS))
+def test_matches_batch_operator(spark, tmp_path, split):
+    """The streaming tier must agree with the batch operators on the
+    same split: per micro-batch, exact keep-min-id, the in-batch
+    MinHash pairs' larger ids dropped, and the docs cross_snapshot_minhash
+    flags against the already-ingested survivors dropped."""
+    tmp = str(tmp_path)
+    files, want = SPLITS[split]
+    for i, rows in enumerate(files):
+        _write(f"{tmp}/src", f"f{i}.json", rows)
+        _run(spark, tmp)
+    expected = _batch_operator_survivors(spark, files)
+    assert expected == want  # the split exercises what it says it does
+    assert _out_ids(spark, tmp) == expected
+
+
+def test_micro_batch_job_budget(spark, tmp_path):
+    """A micro-batch against existing state runs one candidate join and
+    one verification over a once-shingled batch: its Spark job count
+    stays under the budget (two separate in-batch and state passes, each
+    shingling and bucketing the batch again, ran 41 jobs here)."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        jobs = jsc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
 
     tmp = str(tmp_path)
-    f1 = [(1, BASE), (2, OTHER)]
-    f2 = [(10, NEAR), (11, "fresh text nothing like anything else "
-                           "in this tiny corpus of documents")]
-    _write(f"{tmp}/src", "f1.json", f1)
+    _write(f"{tmp}/src", "f1.json", [(1, BASE), (2, OTHER)])
     _run(spark, tmp)
-    _write(f"{tmp}/src", "f2.json", f2)
+    _write(f"{tmp}/src", "f2.json", [(3, NEAR), (4, "brand new unseen text "
+                                                   "with many original tokens"), (5, OTHER)])
+    before = last_job_id()
     _run(spark, tmp)
+    jobs = last_job_id() - before
+    assert _out_ids(spark, tmp) == [1, 2, 4]
+    assert jobs <= 30, f"second micro-batch ran {jobs} Spark jobs"
 
-    base = spark.createDataFrame(f1, "doc_id long, text string")
-    batch = spark.createDataFrame(f2, "doc_id long, text string")
-    flagged = {
-        r["doc_id"]
-        for r in cross_snapshot_minhash(batch, base, threshold=0.8).collect()
-    }
-    expected = sorted([d for d, _ in f1] + [d for d, _ in f2 if d not in flagged])
-    assert _out_ids(spark, tmp) == expected
+
+def test_custom_id_and_text_columns(spark, tmp_path):
+    """``id_col``/``text_col`` name the batch's columns everywhere,
+    the bucket state included (band buckets used to come out keyed
+    ``doc_id`` whatever ``id_col`` said, and the batch failed)."""
+    tmp = str(tmp_path)
+    schema = T.StructType([T.StructField("page_id", T.LongType()),
+                           T.StructField("body", T.StringType())])
+    for name, rows in [("f1.json", [(1, BASE), (2, OTHER)]),
+                       ("f2.json", [(3, NEAR), (4, "brand new unseen text "
+                                                   "with many original tokens")])]:
+        os.makedirs(f"{tmp}/src", exist_ok=True)
+        with open(f"{tmp}/src/{name}", "w") as f:
+            for i, text in rows:
+                f.write(json.dumps({"page_id": i, "body": text}) + "\n")
+        neardup_stream_ingest(
+            spark, f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt", f"{tmp}/state",
+            schema, id_col="page_id", text_col="body",
+        )
+    out = spark.read.schema(schema).parquet(f"{tmp}/out")
+    assert sorted(r["page_id"] for r in out.collect()) == [1, 2, 4]
+    bk = spark.read.parquet(f"{tmp}/state/base_buckets")
+    assert "page_id" in bk.columns and "doc_id" not in bk.columns

@@ -14,11 +14,19 @@ range, and whether the change's median is within the metric's
 ``bound`` (relative, in the metric's worse direction; unresolved when
 the parent's spread, IQR / median, exceeds the bound and not every
 change run beats every parent run). The last line is the same summary
-as one JSON object.
+as one JSON object, ``{"reports": [...]}`` with one report per workload.
+
+``--workload`` takes a comma list: per seed, every listed workload runs
+its pair before the next seed starts, so a drift of the host hits all
+workloads alike. ``--claim METRIC`` adds, per workload, ``claim_met``:
+the change wins at least 0.9 of the pairs (a pair where a side failed
+is no win) and its median beats the parent's by more than the parent's
+interquartile range.
 
 Usage:
   python tools/bench_ab.py --parent ../ab/parent --change ../ab/change \\
-      --workload ticks_history --seeds 501-510 [--out ab.jsonl]
+      --workload ticks_history,stream_dedup --seeds 501-510 \\
+      [--claim run_s_p50] [--out ab.jsonl]
 
 Make the trees with ``git archive <sha> | tar -x -C DIR`` (committed
 files only). Run nothing else on the host meanwhile.
@@ -108,39 +116,15 @@ def summarize(pairs: list[dict], metric: dict) -> dict:
     }
 
 
-def main(argv: list[str] | None = None) -> int:
-    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--parent", required=True, help="parent tree")
-    p.add_argument("--change", required=True, help="change tree")
-    p.add_argument("--workload", required=True)
-    p.add_argument("--seeds", required=True, help="A-B, inclusive")
-    p.add_argument("--out", help="append each invocation's result here (jsonl)")
-    args = p.parse_args(argv)
+def claim_met(m: dict, n_pairs: int) -> bool:
+    """The claim rule on one metric's summary over ``n_pairs`` pairs run:
+    wins in at least 0.9 of them and a median gap larger than the
+    parent's interquartile range."""
+    return bool(m["pairs"]) and m["wins"] >= 0.9 * n_pairs and m["gap_exceeds_parent_iqr"]
 
-    with open(os.path.join(args.change, "BENCHMARK.json")) as f:
-        bench = json.load(f)
-    trees = {"parent": os.path.abspath(args.parent),
-             "change": os.path.abspath(args.change)}
-    pairs = []
-    for i, seed in enumerate(_seeds(args.seeds)):
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        pair = {"seed": seed}
-        for side in order:
-            r = _run(bench["command"], trees[side], args.workload, seed,
-                     bench["run_seconds"])
-            pair[side] = r
-            shown = {k: round(v, 3) for k, v in r["metrics"].items()}
-            print(f"seed {seed} {side:<6} ok={r['ok']} {shown}", flush=True)
-            if args.out:
-                with open(args.out, "a") as f:
-                    f.write(json.dumps({"workload": args.workload, "seed": seed,
-                                        "side": side, **r}) + "\n")
-        pairs.append(pair)
 
-    failed = {s: sum(not p[s]["ok"] for p in pairs) for s in trees}
-    report = {"workload": args.workload, "failed": failed,
-              "metrics": [summarize(pairs, m) for m in bench["end_to_end"]]}
-    print(f"\n{args.workload}: {len(pairs)} pairs, failed {failed}")
+def _print_report(report: dict) -> None:
+    print(f"\n{report['workload']}: {report['pairs']} pairs, failed {report['failed']}")
     for m in report["metrics"]:
         if not m["pairs"]:
             print(f"{m['metric']}: no pair where both sides passed")
@@ -158,8 +142,58 @@ def main(argv: list[str] | None = None) -> int:
               f"{m['gap_exceeds_parent_iqr']}, within bound {m['bound']}: "
               f"{m['within_bound']} (parent spread {m['parent_spread']:.3f}"
               f"{'' if m['resolved'] else ', unresolved'})")
-    print(json.dumps(report))
-    return 0 if not any(failed.values()) else 1
+    if "claim" in report:
+        print(f"claim {report['claim']} on {report['workload']}: "
+              f"claim_met={report['claim_met']}")
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--parent", required=True, help="parent tree")
+    p.add_argument("--change", required=True, help="change tree")
+    p.add_argument("--workload", required=True, help="one or a comma list")
+    p.add_argument("--seeds", required=True, help="A-B, inclusive")
+    p.add_argument("--claim", metavar="METRIC",
+                   help="end-to-end metric whose gain is claimed")
+    p.add_argument("--out", help="append each invocation's result here (jsonl)")
+    args = p.parse_args(argv)
+
+    with open(os.path.join(args.change, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    workloads = args.workload.split(",")
+    if args.claim and args.claim not in {m["name"] for m in bench["end_to_end"]}:
+        p.error(f"--claim {args.claim}: not an end-to-end metric of BENCHMARK.json")
+    trees = {"parent": os.path.abspath(args.parent),
+             "change": os.path.abspath(args.change)}
+    pairs: dict[str, list[dict]] = {w: [] for w in workloads}
+    for i, seed in enumerate(_seeds(args.seeds)):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for w in workloads:
+            pair = {"seed": seed}
+            for side in order:
+                r = _run(bench["command"], trees[side], w, seed, bench["run_seconds"])
+                pair[side] = r
+                shown = {k: round(v, 3) for k, v in r["metrics"].items()}
+                print(f"{w} seed {seed} {side:<6} ok={r['ok']} {shown}", flush=True)
+                if args.out:
+                    with open(args.out, "a") as f:
+                        f.write(json.dumps({"workload": w, "seed": seed,
+                                            "side": side, **r}) + "\n")
+            pairs[w].append(pair)
+
+    reports = []
+    for w in workloads:
+        report = {"workload": w, "pairs": len(pairs[w]),
+                  "failed": {s: sum(not p[s]["ok"] for p in pairs[w]) for s in trees},
+                  "metrics": [summarize(pairs[w], m) for m in bench["end_to_end"]]}
+        if args.claim:
+            m = next(m for m in report["metrics"] if m["metric"] == args.claim)
+            report["claim"] = args.claim
+            report["claim_met"] = claim_met(m, len(pairs[w]))
+        _print_report(report)
+        reports.append(report)
+    print(json.dumps({"reports": reports}))
+    return 0 if not any(any(r["failed"].values()) for r in reports) else 1
 
 
 if __name__ == "__main__":
