@@ -690,9 +690,9 @@ def trained_centroid_rows_multi(
     order."""
     if store is None:
         store = _default_model_store(spark)
+    keys = [(validate_corpus_version(cv), k, iters) for cv, _ in entries]
     missing: list[tuple[int, tuple]] = []
-    for gi, (cv, _) in enumerate(entries):
-        key = (validate_corpus_version(cv), k, iters)
+    for gi, key in enumerate(keys):
         if key not in _CENTROID_CACHE and store is not None:
             _store_read_codebook(store, key)
         if key not in _CENTROID_CACHE:
@@ -719,7 +719,7 @@ def trained_centroid_rows_multi(
             _CENTROID_CACHE[key] = sorted(by_g.get(gi, []))
             if store is not None:
                 _store_publish_codebook(spark, store, key)
-    return [_CENTROID_CACHE[(cv, k, iters)] for cv, _ in entries]
+    return [_CENTROID_CACHE[key] for key in keys]
 
 
 #: model sidecar tables sharing the ``{corpus_version}|...`` key form

@@ -76,7 +76,7 @@ PACK_FILES = (
 )
 
 
-@dataclass
+@dataclass(frozen=True)
 class PackStatement:
     name: str  # flat registry/view name (rules upper-cased, Snowflake-style)
     schema: str  # 'rules' | 'data' | '' (bare monitoring query)
@@ -242,7 +242,7 @@ def load_pack(path: str) -> list[PackStatement]:
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     hit = _LOAD_PACK_CACHE.get(key)
     if hit is not None:
-        return list(hit)  # shallow copy: callers may not mutate entries
+        return list(hit)  # entries are frozen, so sharing them is safe
     out = _load_pack_uncached(path)
     _LOAD_PACK_CACHE[key] = out
     return list(out)

@@ -117,24 +117,6 @@ def create_alerts(
             & (F.col("alert.EVENT_TIME") > F.lit(from_ts))
         )
 
-    if hasattr(store, "touched_partitions"):
-        # PartitionedResultsStore: merge only the partitions of the
-        # match window — O(hot window), not O(table)
-        return store.upsert(
-            "alerts",
-            grouped,
-            on=match,
-            when_matched={"counter": F.col("counter") + F.col("src_counter")},
-            window_from=from_ts,
-            # partition bounding needs a concrete upper date even on the
-            # default (to_ts=None) path — without it the store reads
-            # only the incoming rows' partitions and a match sitting in
-            # an earlier partition (e.g. yesterday, just inside the
-            # 90-minute window at 00:15) would duplicate instead of
-            # incrementing. Day granularity makes the driver-side
-            # utcnow() safe here, unlike the row filter above.
-            window_to=to_ts or dt.datetime.utcnow(),
-        )
     return store.upsert(
         "alerts",
         grouped,

@@ -7,12 +7,14 @@ this module provides the one genuinely new "physical" piece of the
 port (SURVEY §7.2 step 1): a join-based read-merge-write upsert with
 versioned atomic publication.
 
-Layout: ``{base}/{table}/v=N/…parquet``. A writer publishes version
-N+1 by writing the full new content into a fresh directory (Spark
-emits _SUCCESS on completion) and readers always pick the highest
-*complete* version — a crashed writer leaves an ignored partial dir.
-Appends write additional part-files into the current version (parquet
-append is file-atomic).
+Layout: ``{base}/{table}/v=N/…parquet``. Every write publishes
+version N+1 through one routine (``_publish``): the new version's files
+are filled into a hidden ``.inflight-*`` dir, which is then renamed to
+``v=N+1``. Readers always pick the highest complete version, and a
+crashed writer leaves only an ignored hidden dir. An ``append`` writes
+its rows once into a staging dir; the publish hard-links the current
+version's files and the staged ones into the next version, so no row
+is rewritten and a merge that read ``v=N`` can never drop them.
 
 Single-pass commits: a MERGE (``upsert``) or ``update`` is one lazy
 plan — scan the version it read, join, write the next version — run by
@@ -27,13 +29,6 @@ Frames built on the driver (metadata rows, dispatcher results, the
 empty frame of an absent table) go through ``local_frame``: an Arrow
 table handed straight to the JVM, so writing them starts no Python
 worker, and naive datetimes are read in the session time zone.
-
-100 TB note: rewriting a whole results table per merge is the
-reference's own semantic (it rewrites matched rows warehouse-side),
-but at scale the store should partition results by event date and
-rewrite only partitions containing matches; ``upsert`` takes an
-optional ``partition_filter`` for exactly that — rows outside the
-filter are carried over untouched without being shuffled.
 """
 
 from __future__ import annotations
@@ -41,6 +36,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import uuid
 from collections.abc import Callable
 from functools import reduce
 
@@ -79,7 +75,7 @@ def merge_plan(
     when_not_matched_insert: bool,
     when_not_matched_by_source: dict[str, Column] | None = None,
 ) -> tuple[DataFrame, Observation]:
-    """The MERGE INTO statement as one lazy frame, shared by both stores.
+    """The MERGE INTO statement as one lazy frame.
 
     ``incoming`` columns are renamed ``src_<c>`` and joined to
     ``target`` on ``on`` (key names, a Column, or a function
@@ -121,6 +117,17 @@ def merge_plan(
         for f in schema
     ]
     return joined.select(*cols), obs
+
+
+def _link_parquet(srcs: list[str | None], dst: str) -> None:
+    """A complete version dir at ``dst`` holding hard links to the
+    parquet files of every dir in ``srcs`` (``None`` entries skipped)."""
+    os.makedirs(dst)
+    for src in filter(None, srcs):
+        for name in os.listdir(src):
+            if name.endswith(".parquet"):
+                os.link(os.path.join(src, name), os.path.join(dst, name))
+    open(os.path.join(dst, "_SUCCESS"), "w").close()
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -172,33 +179,33 @@ class ResultsStore:
         )
 
     # -- write -----------------------------------------------------------
-    def append(self, table: str, df: DataFrame) -> int:
-        """Add ``df``'s rows to the current version; returns how many,
-        counted during the write job."""
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        cur = self._current(table)
-        if cur is None:
-            self.overwrite(table, df)
-        else:
-            self._align(table, df).write.mode("append").parquet(cur)
-        return obs.get["n"]
+    def _inflight(self, table: str) -> str:
+        return os.path.join(self._tdir(table), f".inflight-{uuid.uuid4().hex}")
 
-    def overwrite(
-        self, table: str, df: DataFrame, expect_version: int | None = None
+    def _publish(
+        self,
+        table: str,
+        fill: Callable[[str, str | None], None],
+        expect_version: int | None = None,
     ) -> None:
-        """Publish the next version via CAS-rename: the new content is
-        written to a hidden temp dir, then atomically renamed to
-        ``v=N+1``. Two concurrent writers race the rename — posix
-        refuses to rename onto a non-empty directory, so exactly one
-        wins and the loser raises :class:`ConcurrentWriteError` with
-        its temp output removed (no corrupt or merged state).
+        """The one commit of every write: ``fill(tmp, current_dir)``
+        writes the complete next version into a fresh hidden dir, which
+        is then renamed to ``v=N+1``. Two writers race the rename —
+        posix refuses to rename onto a non-empty directory, so exactly
+        one wins and the loser raises :class:`ConcurrentWriteError` with
+        its hidden dir removed (no corrupt or merged state).
+
+        A failure counts as lost to another writer only when a newer
+        version is listed afterwards (that covers a version retired
+        while ``fill`` read it); any other error is re-raised as is. A
+        version that appeared while ``fill`` ran fails the publish
+        before the rename: its slot ``v=N+1`` may already be retired,
+        and a rename into it would publish a version no reader picks.
 
         ``expect_version`` (read-merge-write callers: the version the
         merge was computed FROM; -1 for an empty table) additionally
         fails the publish if any newer version appeared since the
-        read — the lost-update guard for ``upsert``."""
-        df = self._align(table, df)
+        read — the lost-update guard for ``upsert`` and ``update``."""
         vs = self._versions(table)
         cur = vs[-1] if vs else -1
         if expect_version is not None and cur != expect_version:
@@ -206,23 +213,62 @@ class ResultsStore:
                 f"{table}: merge read v={expect_version} but v={cur} is "
                 "now current; re-run the merge"
             )
-        nxt = cur + 1
-        import uuid
-
-        tmp = os.path.join(self._tdir(table), f".inflight-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(tmp)
-        out = os.path.join(self._tdir(table), f"v={nxt}")
+        tdir = self._tdir(table)
+        out = os.path.join(tdir, f"v={cur + 1}")
+        tmp = self._inflight(table)
         try:
+            fill(tmp, os.path.join(tdir, f"v={cur}") if vs else None)
+            if self._versions(table)[-1:] != vs[-1:]:
+                raise FileExistsError(out)  # never rename into a retired slot
             os.rename(tmp, out)
-        except OSError as e:
+        except BaseException as e:
             shutil.rmtree(tmp, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"{table}: another writer published v={nxt} first"
-            ) from e
-        # retire superseded versions (best-effort; readers of the old
-        # version already hold its file handles on posix)
+            if isinstance(e, Exception) and self._versions(table)[-1:] != vs[-1:]:
+                raise ConcurrentWriteError(
+                    f"{table}: another writer published v={cur + 1} first"
+                ) from e
+            raise
+        # retire superseded versions (best-effort). The previous one stays
+        # for readers that planned on it; a write still reading an older
+        # one fails above as lost.
         for v in vs[:-1]:
-            shutil.rmtree(os.path.join(self._tdir(table), f"v={v}"), ignore_errors=True)
+            shutil.rmtree(os.path.join(tdir, f"v={v}"), ignore_errors=True)
+
+    def append(self, table: str, df: DataFrame) -> int:
+        """Publish the current rows plus ``df``'s as the next version;
+        returns how many rows ``df`` added, counted during its write.
+
+        ``df`` is written once into a hidden staging dir, and the
+        publish hard-links the current version's files and the staged
+        ones into the next version. Appends commute, so an append that
+        loses the publish to a newer version relinks on top of it. An
+        empty append publishes nothing once the table exists."""
+        obs = Observation()
+        df = self._align(table, df.observe(obs, F.count(F.lit(1)).alias("n")))
+        staged = self._inflight(table)
+        try:
+            df.write.parquet(staged)
+            n = obs.get["n"]
+            if n == 0 and self._versions(table):
+                return 0
+            while True:
+                try:
+                    self._publish(
+                        table, lambda tmp, cur: _link_parquet([cur, staged], tmp)
+                    )
+                    return n
+                except ConcurrentWriteError:
+                    continue
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+
+    def overwrite(
+        self, table: str, df: DataFrame, expect_version: int | None = None
+    ) -> None:
+        """Publish ``df`` as the whole next version (see ``_publish``
+        for the CAS and ``expect_version`` contract)."""
+        df = self._align(table, df)
+        self._publish(table, lambda tmp, _cur: df.write.parquet(tmp), expect_version)
 
     def retain(self, table: str, keep: Column) -> dict[str, int]:
         """CAS-safe retention pass: republish the table keeping only
@@ -267,8 +313,7 @@ class ResultsStore:
         - rows of the target not matched stay as-is; unmatched source
           rows are inserted (reference WHEN NOT MATCHED ... INSERT).
         - ``partition_filter``: target rows NOT satisfying it are
-          guaranteed unmatched and carried over without joining — the
-          partition-pruned rewrite path at scale.
+          guaranteed unmatched and carried over without joining.
         - ``when_not_matched_by_source``: updates for the target rows
           no source row matched (SQL WHEN NOT MATCHED BY SOURCE). Not
           combinable with ``partition_filter`` (ValueError): the

@@ -1,9 +1,9 @@
 """Regression tests for the round-1 ADVICE findings:
 
-1. PartitionedResultsStore.upsert must accept id-only sources (sid/
-   aid frames without the table's time column) — the suppression,
-   processor, and dispatcher runners all send those, so the full alert
-   lifecycle must run against the partitioned store.
+1. The store's upsert must accept id-only sources (sid/aid frames
+   without the table's time column) — the suppression, processor, and
+   dispatcher runners all send those, so the full alert lifecycle must
+   run through them.
 2. Correlation must never rewrite existing correlation_ids (reference
    alert_processor.py:14-17 updates one NULL row at a time), must seed
    chains from them, and must bound the scan on alert_time (not
@@ -33,7 +33,7 @@ from snowalert_spark.runners import (
     alert_queries,
     alert_suppressions,
 )
-from snowalert_spark.store_partitioned import PartitionedResultsStore
+from snowalert_spark.store import ResultsStore
 
 
 def _mk_registry(t1: str, t2: str) -> RuleRegistry:
@@ -57,12 +57,12 @@ def _mk_registry(t1: str, t2: str) -> RuleRegistry:
     return reg
 
 
-def test_partitioned_store_full_alert_lifecycle(spark, tmp_path):
+def test_id_only_upserts_full_alert_lifecycle(spark, tmp_path):
     """queries → suppressions (sid-only upsert) → correlation (aid-only
-    upsert) → dispatch (aid-only upsert), all against the partitioned
-    store. Pre-fix, suppressions raised UNRESOLVED_COLUMN event_time
-    and were quarantined; processor/dispatcher crashed outright."""
-    store = PartitionedResultsStore(spark, str(tmp_path / "presults"))
+    upsert) → dispatch (aid-only upsert), all against one store. An
+    id-only source must merge without the table's time column: no
+    stage may be quarantined or crash."""
+    store = ResultsStore(spark, str(tmp_path / "results"))
     now = dt.datetime.utcnow().replace(microsecond=0)
     t1 = (now - dt.timedelta(minutes=50)).strftime("%Y-%m-%d %H:%M:%S")
     t2 = (now - dt.timedelta(minutes=20)).strftime("%Y-%m-%d %H:%M:%S")
@@ -93,8 +93,6 @@ def test_correlation_preserves_existing_ids(spark, tmp_path):
     """An already-correlated alert keeps its id across runs, and a new
     linked alert adopts it (seeded chain) instead of the whole chain
     being re-minted."""
-    from snowalert_spark.store import ResultsStore
-
     store = ResultsStore(spark, str(tmp_path / "results"))
     now1 = dt.datetime.utcnow().replace(microsecond=0)
     tA = (now1 - dt.timedelta(minutes=10)).strftime("%Y-%m-%d %H:%M:%S")

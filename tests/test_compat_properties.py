@@ -109,6 +109,20 @@ def test_pack_parser_contract(tmp_path):
     assert "data_things" in query.body  # schema flattening applied
 
 
+def test_pack_statements_are_frozen(tmp_path):
+    """``load_pack`` shares cached entries between callers, so an entry
+    must not be mutable: one caller's edit would reach every later
+    load of the same file."""
+    import dataclasses
+
+    p = tmp_path / "frozen_pack.sql"
+    p.write_text("-- Only Query\nSELECT 1 AS one\n;\n")
+    st = packs.load_pack(str(p))[0]
+    with pytest.raises(dataclasses.FrozenInstanceError):
+        st.body = "SELECT 2"
+    assert packs.load_pack(str(p))[0].body == st.body
+
+
 def test_pack_fixup_drift_detection(tmp_path):
     """A FIXUP whose target text vanished must fail loudly, not rot."""
     p = tmp_path / "osquery_query_pack.sql"

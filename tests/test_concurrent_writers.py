@@ -1,25 +1,26 @@
 """Concurrent-writer safety (round-7 verdict item 5): versioned
 publication is a CAS-rename — two interleaved read-merge-write upserts
 cannot silently lose an update or corrupt the table. One wins; the
-other raises ConcurrentWriteError with its temp output removed.
+other raises ConcurrentWriteError with its temp output removed. An
+append publishes a version too, so a merge it overtakes fails instead
+of dropping its rows, and racing appends all land.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import threading
 
 import pyspark.sql.functions as F
 import pytest
 
 from snowalert_spark.store import ConcurrentWriteError, ResultsStore
-from snowalert_spark.store_partitioned import PartitionedResultsStore
 
 
-def _violation(spark, vid, suppressed=None, t=None):
-    t = t or dt.datetime(2024, 1, 1)
+def _violation(spark, vid):
     return spark.createDataFrame(
-        [("{}", vid, t, None, suppressed, None)],
+        [("{}", vid, dt.datetime(2024, 1, 1), None, None, None)],
         "result string, id string, alert_time timestamp, ticket string, "
         "suppressed boolean, suppression_rule string",
     )
@@ -107,33 +108,140 @@ def test_blind_overwrite_version_race(spark, tmp_path):
     assert _no_inflight(base)
 
 
-def test_partitioned_interleaved_upserts(spark, tmp_path):
-    base = str(tmp_path / "alerts")
-    a = PartitionedResultsStore(spark, base)
-    b = PartitionedResultsStore(spark, base)
-    t = dt.datetime(2024, 3, 1, 12)
+@pytest.mark.parametrize("merge", ["upsert", "update"])
+def test_append_mid_merge_is_kept_and_the_merge_fails(spark, tmp_path, merge):
+    """An append by another writer lands between a merge's read and its
+    publish: the merge computed from the older version must CAS-fail,
+    and the appended row must stay in the table."""
+    base = str(tmp_path / "results")
+    a, b = ResultsStore(spark, base), ResultsStore(spark, base)
+    a.overwrite("violations", _violation(spark, "seed"))
 
-    def frame(vid, suppressed=None):
-        return _violation(spark, vid, suppressed=suppressed, t=t)
-
-    a.append("violations", frame("seed"))
-
-    on = lambda tgt, src: F.col("id") == F.col("src_id")
-    orig = a._publish
+    orig = a.overwrite
     fired = []
 
-    def racing_publish(table, date, df, expect_version=None):
+    def racing(table, df, expect_version=None):
         if not fired:
             fired.append(True)
-            b.upsert("violations", frame("from_b"), on=on)
-        return orig(table, date, df, expect_version=expect_version)
+            b.append("violations", _violation(spark, "appended"))
+        return orig(table, df, expect_version=expect_version)
 
-    a._publish = racing_publish
+    a.overwrite = racing
     with pytest.raises(ConcurrentWriteError):
-        a.upsert("violations", frame("from_a"), on=on)
+        if merge == "upsert":
+            a.upsert("violations", _violation(spark, "from_a"), on=["id"])
+        else:
+            a.update("violations", F.lit(True), {"suppressed": F.lit(True)})
 
-    ids = sorted(r.id for r in a.read("violations").collect())
-    assert ids == ["from_b", "seed"]
+    rows = {r.id: r.suppressed for r in a.read("violations").collect()}
+    assert rows == {"seed": None, "appended": None}
+    assert _no_inflight(base)
+
+
+@pytest.mark.parametrize("write", ["overwrite", "update"])
+def test_write_overtaken_by_three_publishes_fails(spark, tmp_path, write):
+    """Three appends publish while a write is still filling its next
+    version. By then ``v=0``, which an update reads, and the slot
+    ``v=1``, which either write would rename into, are both retired.
+    The write must fail as lost, not publish a version no reader picks
+    and not surface the missing input files as its own error."""
+    base = str(tmp_path / "results")
+    a, b = ResultsStore(spark, base), ResultsStore(spark, base)
+    a.overwrite("violations", _violation(spark, "seed"))
+
+    orig = a._inflight
+    fired = []
+
+    def racing(table):
+        if not fired:
+            fired.append(True)
+            for i in range(3):
+                b.append("violations", _violation(spark, f"b{i}"))
+        return orig(table)
+
+    a._inflight = racing
+    with pytest.raises(ConcurrentWriteError):
+        if write == "overwrite":
+            a.overwrite("violations", _violation(spark, "from_a"))
+        else:
+            a.update("violations", F.lit(True), {"suppressed": F.lit(True)})
+
+    rows = {r.id: r.suppressed for r in a.read("violations").collect()}
+    assert rows == {"seed": None, "b0": None, "b1": None, "b2": None}
+    assert a._versions("violations") == [2, 3]
+    assert _no_inflight(base)
+
+
+def test_parallel_appends_all_land(spark, tmp_path):
+    """Appends commute: eight writers appending to one table at once
+    each relink on top of whichever version beat them."""
+    base = str(tmp_path / "results")
+    ids = [f"w{i}" for i in range(8)]
+    frames = [_violation(spark, i) for i in ids]
+    errors = []
+
+    def run(df):
+        try:
+            ResultsStore(spark, base).append("violations", df)
+        except BaseException as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(f,)) for f in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert errors == []
+    store = ResultsStore(spark, base)
+    assert sorted(r.id for r in store.read("violations").collect()) == ids
+    assert _no_inflight(base)
+
+
+class _Killed(BaseException):
+    """Stands in for a process killed mid-publish."""
+
+
+@pytest.mark.parametrize("step", ["link", "rename"])
+def test_append_killed_after_its_write_leaves_the_table(
+    spark, tmp_path, monkeypatch, step
+):
+    """An append dying after its staged write, before its publish
+    renamed into place, leaves the version and rows as they were."""
+    base = str(tmp_path / "results")
+    store = ResultsStore(spark, base)
+    store.overwrite("violations", _violation(spark, "seed"))
+    before = store._versions("violations")
+
+    def killed(*a, **kw):
+        raise _Killed(step)
+
+    monkeypatch.setattr(os, step, killed)
+    with pytest.raises(_Killed):
+        store.append("violations", _violation(spark, "lost"))
+    monkeypatch.undo()
+    assert store._versions("violations") == before
+    assert [r.id for r in store.read("violations").collect()] == ["seed"]
+    assert _no_inflight(base)
+
+
+def test_append_link_error_raises_without_retrying(spark, tmp_path, monkeypatch):
+    """Only a newer version makes an append relink; any other OSError
+    (here a denied link) is raised at once, never retried in a loop."""
+    base = str(tmp_path / "results")
+    store = ResultsStore(spark, base)
+    store.overwrite("violations", _violation(spark, "seed"))
+    calls = []
+
+    def denied(*a, **kw):
+        calls.append(a)
+        assert len(calls) == 1, "append retried a failed link"
+        raise PermissionError(13, "Permission denied", a[0])
+
+    monkeypatch.setattr(os, "link", denied)
+    with pytest.raises(PermissionError):
+        store.append("violations", _violation(spark, "denied"))
+    monkeypatch.undo()
+    assert [r.id for r in store.read("violations").collect()] == ["seed"]
     assert _no_inflight(base)
 
 

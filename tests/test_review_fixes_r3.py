@@ -1,6 +1,6 @@
-"""Round-3 self-review fixes, pinned: default-window partition bounding
-in the alert merge, transpiler cast/BETWEEN/JOIN-flatten/QUALIFY-UNION/
-clause-whitespace repairs, connector edge guards."""
+"""Round-3 self-review fixes, pinned: the default-window alert merge,
+transpiler cast/BETWEEN/JOIN-flatten/QUALIFY-UNION/clause-whitespace
+repairs, connector edge guards."""
 
 from __future__ import annotations
 
@@ -12,26 +12,26 @@ from pyspark.sql import functions as F
 from snowalert_spark import compat
 
 
-def test_partitioned_default_window_reads_match_partitions(spark, tmp_path):
-    """to_ts=None (production default) must still bound partitions with
-    a concrete upper date: an existing alert in *yesterday's* partition
-    whose event_time sits inside the window has to be counter-merged,
-    not duplicated, even though all incoming rows land today."""
+def test_default_window_counter_merges_an_earlier_match(spark, tmp_path):
+    """to_ts=None (production default): an existing alert from an hour
+    ago whose event_time sits inside the window has to be
+    counter-merged, not duplicated, although the rule's own rows carry
+    CURRENT_TIMESTAMP as their event_time."""
     from snowalert_spark.rules import RuleRegistry
     from snowalert_spark.runners import alert_queries
     from snowalert_spark.schema import ALERTS
-    from snowalert_spark.store_partitioned import PartitionedResultsStore
+    from snowalert_spark.store import ResultsStore
 
-    pstore = PartitionedResultsStore(spark, str(tmp_path))
-    yesterday_ts = dt.datetime.utcnow() - dt.timedelta(hours=1)
+    store = ResultsStore(spark, str(tmp_path))
+    earlier_ts = dt.datetime.utcnow() - dt.timedelta(hours=1)
     existing = {
         "alert": {"ALERT_ID": "old-1", "OBJECT": "host-9",
-                  "DESCRIPTION": "same-desc", "EVENT_TIME": yesterday_ts},
-        "alert_time": yesterday_ts, "event_time": yesterday_ts,
+                  "DESCRIPTION": "same-desc", "EVENT_TIME": earlier_ts},
+        "alert_time": earlier_ts, "event_time": earlier_ts,
         "ticket": None, "suppressed": None, "suppression_rule": None,
         "counter": 1, "correlation_id": None, "handled": None,
     }
-    pstore.append("alerts", spark.createDataFrame([existing], ALERTS))
+    store.append("alerts", spark.createDataFrame([existing], ALERTS))
 
     reg = RuleRegistry()
     reg.create(
@@ -43,10 +43,10 @@ def test_partitioned_default_window_reads_match_partitions(spark, tmp_path):
         comment="rf1",
     )
     counts = alert_queries.create_alerts(
-        spark, pstore, reg.rules["RF1_ALERT_QUERY"],
-        from_ts=yesterday_ts - dt.timedelta(minutes=30), to_ts=None,
+        spark, store, reg.rules["RF1_ALERT_QUERY"],
+        from_ts=earlier_ts - dt.timedelta(minutes=30), to_ts=None,
     )
-    rows = pstore.read("alerts").collect()
+    rows = store.read("alerts").collect()
     assert counts == {"updated": 1, "inserted": 0}
     assert len(rows) == 1 and rows[0].counter == 2
 

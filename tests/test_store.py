@@ -234,7 +234,9 @@ def test_update_and_append_counts(store, spark):
         )
 
     assert append(["a", "b"]) == 2
+    versions = store._versions("violations")
     assert append([]) == 0
+    assert store._versions("violations") == versions  # nothing to publish
     assert update(F.col("id") == "zz") == 0
     assert update(F.col("id") != "zz") == 2
     assert [r.ticket for r in store.read("violations").collect()] == ["t", "t"]
@@ -244,8 +246,8 @@ def test_update_and_append_counts(store, spark):
 # broadcast of a small shuffled side, and the write itself, which also
 # fills the counts. A merge that caches the target or the join, or
 # counts before it writes, needs 6–7 jobs; an update that counts first
-# needs 3.
-UPSERT_JOBS, UPDATE_JOBS = 4, 1
+# needs 3. An append is its staged write alone; the publish only links.
+UPSERT_JOBS, UPDATE_JOBS, APPEND_JOBS = 4, 1, 1
 
 
 def _jobs(spark, call) -> int:
@@ -290,8 +292,12 @@ def test_commit_job_budgets(store, spark):
             "violations", F.col("id") == "v5", {"suppressed": F.lit(True)}
         ),
     )
-    jobs = (keyed, theta, update)
+    append = _jobs(
+        spark, lambda: store.append("violations", _violations(spark, ["v6"]))
+    )
+    jobs = (keyed, theta, update, append)
     assert max(keyed, theta) <= UPSERT_JOBS and update <= UPDATE_JOBS, jobs
+    assert append <= APPEND_JOBS, jobs
 
 
 def test_upsert_when_not_matched_by_source(store, spark):

@@ -565,3 +565,25 @@ def test_trained_centroid_rows_multi_cache_and_order(spark):
     finally:
         for i in range(2):
             S._CENTROID_CACHE.pop((f"{SF}#r14multi{i}", 4, 1), None)
+
+
+def test_trained_centroid_rows_multi_uses_the_validated_key(spark, monkeypatch):
+    """The miss list and the returned codebooks use one key per entry:
+    a validation that normalises the corpus version must not make the
+    final lookup miss the codebook it just trained."""
+    from pyspark.sql import functions as F
+
+    from snowalert_spark.functions import similarity as S
+    from snowalert_spark.tables import table
+
+    monkeypatch.setattr(S, "validate_corpus_version", str.strip)
+    monkeypatch.delenv("SNOWALERT_MODEL_DIR", raising=False)
+    train = table(spark, SF, "embeddings").filter(F.col("vec_id") < 32)
+    cv = f"{SF}#stripped"
+    try:
+        got = S.trained_centroid_rows_multi(
+            spark, [(f"  {cv} ", train.select("vec_id", "embedding"))], k=4, iters=1
+        )
+        assert got == [S._CENTROID_CACHE[(cv, 4, 1)]] and got[0]
+    finally:
+        S._CENTROID_CACHE.pop((cv, 4, 1), None)
