@@ -633,10 +633,21 @@ def trained_centroid_rows(
         _store_read_codebook(store, key)
     if key not in _CENTROID_CACHE:
         rows = kmeans_fit(train, k=k, iters=iters, id_col=id_col, vec_col=vec_col).collect()
+        if not rows:
+            raise _no_centroids(corpus_version)
         _CENTROID_CACHE[key] = [(int(r["cell"]), [float(x) for x in r["cent"]]) for r in rows]
         if store is not None:
             _store_publish_codebook(spark, store, key)
     return _CENTROID_CACHE[key]
+
+
+def _no_centroids(corpus_version: str) -> ValueError:
+    """An empty codebook is never cached or published: every assignment
+    against it would read a NULL cell."""
+    return ValueError(
+        f"corpus version {corpus_version!r} trained no centroids: its "
+        "train frame is empty or lacks the init ids (id < k)"
+    )
 
 
 def _store_read_codebook(store, key: tuple) -> None:
@@ -716,7 +727,10 @@ def trained_centroid_rows_multi(
                 (int(r["cell"]), [float(x) for x in r["cent"]])
             )
         for gi, key in missing:
-            _CENTROID_CACHE[key] = sorted(by_g.get(gi, []))
+            if gi not in by_g:
+                raise _no_centroids(key[0])
+        for gi, key in missing:
+            _CENTROID_CACHE[key] = sorted(by_g[gi])
             if store is not None:
                 _store_publish_codebook(spark, store, key)
     return [_CENTROID_CACHE[key] for key in keys]

@@ -42,16 +42,14 @@ def serve_webui(
     registry,
     host: str = "127.0.0.1",
     port: int = 8000,
-    ui: str = "spa",
     secret: str | None = None,
     connector_modules: list[str] | None = None,
     serve: bool = True,
 ):
     """Serve the WebUI (reference: ``./run webui`` →
-    src/webui/backend/webui/app.py). ``ui='spa'`` serves the
-    single-page app shell everywhere + the JSON API under /api/
-    (the reference's React frontend analog); ``ui='pages'`` serves
-    the server-rendered HTML layer over the same API. The sid secret
+    src/webui/backend/webui/app.py): the single-page app shell
+    everywhere + the JSON API under /api/ (the reference's React
+    frontend analog). The sid secret
     comes from --secret or $SA_WEBUI_SECRET (empty = mutation
     endpoints fail closed, matching WebApi's auth gate)."""
     import importlib as _il
@@ -59,7 +57,6 @@ def serve_webui(
     from wsgiref.simple_server import make_server
 
     from snowalert_spark.webui import WebApi
-    from snowalert_spark.webui_pages import WebPages
     from snowalert_spark.webui_spa import WebSPA
 
     connectors = {}
@@ -84,9 +81,8 @@ def serve_webui(
         spark=spark,
         connectors=connectors,
     )
-    app = WebSPA(api) if ui == "spa" else WebPages(api)
-    srv = make_server(host, port, app)
-    print(f"webui ({ui}) listening on :{srv.server_port}")
+    srv = make_server(host, port, WebSPA(api))
+    print(f"webui listening on :{srv.server_port}")
     if serve:
         srv.serve_forever()
     return srv
@@ -117,7 +113,6 @@ def main(argv: list[str] | None = None) -> int:
     # operator choice (--host ''), not something a demo run does
     p.add_argument("--host", default="127.0.0.1")
     p.add_argument("--port", type=int, default=8000)
-    p.add_argument("--ui", choices=["spa", "pages"], default="spa")
     p.add_argument("--secret", default=None,
                    help="sid secret (default $SA_WEBUI_SECRET)")
     p.add_argument("--connectors", default=None,
@@ -151,7 +146,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.target == "webui":
         serve_webui(
-            spark, registry, host=args.host, port=args.port, ui=args.ui,
+            spark, registry, host=args.host, port=args.port,
             secret=args.secret,
             connector_modules=(
                 [m.strip() for m in args.connectors.split(",") if m.strip()]

@@ -18,7 +18,9 @@ watermarks):
 from __future__ import annotations
 
 import json
+import operator
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -188,11 +190,11 @@ def _batch_dir(path: str, batch_id: int) -> str:
 def _read_batched_state(
     spark, path: str, schema_str: str, batch_id: int, retention_batches
 ) -> DataFrame:
-    """State rows visible to micro-batch ``batch_id``: everything
-    previously committed — rows from the CURRENT batch id are
-    excluded, so a crashed attempt's partially written state can never
-    match against its own replay — bounded below by the retention
-    horizon. ``batch_id`` is a partition column in the batched layout,
+    """State rows visible to micro-batch ``batch_id``, without the
+    ``batch_id`` column: everything previously committed — rows from
+    the CURRENT batch id are excluded, so a crashed attempt's partially
+    written state can never match against its own replay — bounded
+    below by the retention horizon. ``batch_id`` is a partition column in the batched layout,
     so both bounds prune whole directories instead of filtering rows.
 
     Pre-r10 state dirs used flat appended part files carrying batch_id
@@ -224,7 +226,7 @@ def _read_batched_state(
     df = df.filter(F.col("batch_id") < batch_id)
     if retention_batches is not None:
         df = df.filter(F.col("batch_id") > batch_id - retention_batches)
-    return df
+    return df.drop("batch_id")
 
 
 def _compact_expired_state(
@@ -250,11 +252,22 @@ def _compact_expired_state(
                 shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
-def _unpersisting(body):
-    """``foreachBatch`` function running ``body(batch, batch_id,
-    cached)``: every frame the body appends to ``cached`` is
-    unpersisted when the micro-batch ends, whether it succeeded or
-    raised, so a failed batch leaks no cached blocks."""
+def _reader(spark: SparkSession, fmt: str, schema: T.StructType):
+    """File-source stream reader; a CSV file's first line is its
+    header, never a row."""
+    reader = spark.readStream.format(fmt).schema(schema)
+    if fmt == "csv":
+        reader = reader.option("header", "true")
+    return reader
+
+
+def _run_batches(spark, src_path, fmt, schema, checkpoint, body) -> None:
+    """Run ``body(batch, batch_id, cached)`` on each micro-batch of the
+    files under ``src_path`` the checkpoint has not seen, then return
+    (``availableNow``: the scheduler owns the cadence). Every frame the
+    body appends to ``cached`` is unpersisted when its micro-batch
+    ends, whether it succeeded or raised, so a failed batch leaks no
+    cached blocks."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         cached: list[DataFrame] = []
@@ -264,7 +277,82 @@ def _unpersisting(body):
             for df in cached:
                 df.unpersist()
 
-    return process
+    (
+        _reader(spark, fmt, schema)
+        .load(src_path)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _tagged(batch_rows: DataFrame, state_rows: DataFrame) -> DataFrame:
+    """The batch's rows together with the state's, each tagged with
+    its side in ``in_state``."""
+    return batch_rows.withColumn("in_state", F.lit(False)).unionByName(
+        state_rows.withColumn("in_state", F.lit(True))
+    )
+
+
+def _candidate_pairs(
+    batch_keys: DataFrame, state_keys: DataFrame, on: list[str], id_col: str
+) -> DataFrame:
+    """``(id_col, dup_of, in_state)`` candidates of one near-dup
+    micro-batch: its key rows equi-join, on the columns ``on``, its own
+    key rows together with the state's. A match counts when it comes
+    from state, or from the batch with a smaller id, so an in-batch
+    pair drops only its larger id."""
+    same_key = reduce(
+        operator.and_, [F.col(f"a.{c}") == F.col(f"b.{c}") for c in on]
+    )
+    return (
+        batch_keys.alias("a")
+        .join(
+            _tagged(batch_keys, state_keys).alias("b"),
+            same_key
+            & (F.col("b.in_state") | (F.col(f"b.{id_col}") < F.col(f"a.{id_col}"))),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(id_col),
+            F.col(f"b.{id_col}").alias("dup_of"),
+            F.col("b.in_state").alias("in_state"),
+        )
+        .distinct()
+    )
+
+
+def _verified_ids(cands, batch_rows, state_rows, id_col, payload, match):
+    """Distinct ids of ``cands`` (:func:`_candidate_pairs`) whose
+    ``match`` holds, for tiers with one payload row per id: ``match``
+    is a Column over ``pa``, the candidate's own payload, and ``pb``,
+    its ``dup_of``'s payload read from the side ``in_state`` names."""
+    return (
+        cands.join(batch_rows.select(id_col, F.col(payload).alias("pa")), id_col)
+        .join(
+            _tagged(batch_rows, state_rows).select(
+                F.col(id_col).alias("dup_of"),
+                "in_state",
+                F.col(payload).alias("pb"),
+            ),
+            ["dup_of", "in_state"],
+        )
+        .filter(match)
+        .select(id_col)
+        .distinct()
+    )
+
+
+def _publish_survivors(sinks, dups, id_col: str, batch_id: int) -> None:
+    """Write each ``(rows, path)`` sink, less the dropped ids ``dups``,
+    to its ``batch_id={b}`` directory with per-directory OVERWRITE, so
+    a replayed micro-batch rewrites exactly its own output and state
+    (idempotent)."""
+    for rows, path in sinks:
+        rows.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
+            _batch_dir(path, batch_id)
+        )
 
 
 def neardup_stream_ingest(
@@ -299,11 +387,9 @@ def neardup_stream_ingest(
     2. the batch is shingled and band-bucketed ONCE; both frames are
        cached and feed every step below — the accumulated corpus is
        NEVER re-shingled or all-paired;
-    3. one candidate join: the batch buckets equi-join, on
-       (band, band_hash), the batch's own buckets together with the
-       persisted state buckets, each row tagged with its side; a
-       candidate counts when it comes from state, or from the batch
-       with a smaller id;
+    3. one candidate join (:func:`_candidate_pairs`, shared with the
+       embedding and media tiers) on (band, band_hash) against the
+       batch's smaller ids and the persisted state buckets;
     4. one verification: candidates count shared shingles against the
        batch's own shingles together with the persisted state
        shingles, and set sizes are taken per (id, side) — so a doc
@@ -392,33 +478,14 @@ def neardup_stream_ingest(
         base_sh = _read_batched_state(
             spark, sh_dir, f"{id_col} long, s string, batch_id long",
             batch_id, retention_batches,
-        ).drop("batch_id")
+        )
         base_bk = _read_batched_state(
             spark, bk_dir,
             f"{id_col} long, band int, band_hash string, batch_id long",
             batch_id, retention_batches,
-        ).drop("batch_id")
-        other_bk = bk.withColumn("in_state", F.lit(False)).unionByName(
-            base_bk.withColumn("in_state", F.lit(True))
         )
-        other_sh = sh.withColumn("in_state", F.lit(False)).unionByName(
-            base_sh.withColumn("in_state", F.lit(True))
-        )
-        cands = (
-            bk.alias("a")
-            .join(
-                other_bk.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("b.in_state") | (F.col(f"b.{id_col}") < F.col(f"a.{id_col}"))),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias(id_col),
-                F.col(f"b.{id_col}").alias("dup_of"),
-                F.col("b.in_state").alias("in_state"),
-            )
-            .distinct()
-        )
+        cands = _candidate_pairs(bk, base_bk, ["band", "band_hash"], id_col)
+        other_sh = _tagged(sh, base_sh)
         # -- 4. one verification; sizes per (id, side) keep a same-id
         # re-delivery apart from its stored namesake ----------------------
         sizes = other_sh.groupBy(id_col, "in_state").agg(F.count("*").alias("n"))
@@ -451,35 +518,17 @@ def neardup_stream_ingest(
         )
         cached.append(dups)
 
-        # -- 5. publish survivors + their state: one batch_id={b}
-        # partition directory per sink, per-directory OVERWRITE, so a
-        # replayed batch rewrites exactly its own output (idempotent).
-        # sh and bk hold keep's ids only, so the anti-join on dups
-        # leaves exactly the survivors' rows
-        keep.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
-            _batch_dir(dst_path, batch_id)
-        )
-        sh.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
-            _batch_dir(sh_dir, batch_id)
-        )
-        bk.join(dups, id_col, "left_anti").write.mode("overwrite").parquet(
-            _batch_dir(bk_dir, batch_id)
+        # -- 5. publish survivors + their state. sh and bk hold keep's
+        # ids only, so the anti-join on dups leaves exactly the
+        # survivors' rows
+        _publish_survivors(
+            [(keep, dst_path), (sh, sh_dir), (bk, bk_dir)], dups, id_col, batch_id
         )
         # drop expired state directories so the stores stay bounded
         if retention_batches is not None:
             _compact_expired_state((sh_dir, bk_dir), batch_id, retention_batches)
 
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    q = (
-        reader.load(src_path)
-        .writeStream.foreachBatch(_unpersisting(process))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)
 
 
 def neardup_embedding_stream_ingest(
@@ -501,21 +550,25 @@ def neardup_embedding_stream_ingest(
     """Streaming EMBEDDING near-dup ingest — the vector-space arm of
     :func:`neardup_stream_ingest` (which covers exact + MinHash text).
     Each arriving file's vectors are dropped when their exact cosine
-    to anything already ingested reaches ``threshold``; candidates
-    come from the deterministic rplsh band buckets
-    (``similarity.rplsh_band_rows`` — fixed multiplicative-hash
-    hyperplanes, so buckets computed in different micro-batches or
-    sessions collide exactly like same-session ones).
+    to anything already ingested, or to a smaller id in the same
+    micro-batch, reaches ``threshold``; candidates come from the
+    deterministic rplsh band buckets (``similarity.rplsh_band_rows`` —
+    fixed multiplicative-hash hyperplanes, so buckets computed in
+    different micro-batches or sessions collide exactly like
+    same-session ones).
 
-    Mechanics per micro-batch (``foreachBatch``):
+    Mechanics per micro-batch (``foreachBatch``), the text tier's
+    shape for one payload row per id:
 
-    1. in-batch pass: rplsh candidate/verify pairs inside the batch
-       keep the smaller ``id_col`` per verified pair;
-    2. batch-vs-state: the batch's band rows equi-join the persisted
-       base buckets on (b, h) — the accumulated corpus is NEVER
-       re-signed or all-paired — then candidates exact-cosine-verify
-       against the persisted base VECTORS; matches are dropped;
-    3. survivors append to ``dst_path``; their vectors + band rows
+    1. the batch is signed into band rows ONCE (cached for the
+       candidate join and the state write);
+    2. one candidate join (:func:`_candidate_pairs`) on (b, h) against
+       the batch's smaller ids and the persisted band rows — the
+       accumulated corpus is NEVER re-signed or all-paired;
+    3. one verification (:func:`_verified_ids`): quantized exact cosine
+       >= ``threshold`` against the match's vector, from the side the
+       candidate came from, drops a vector;
+    4. survivors append to ``dst_path``; their vectors + band rows
        append to the state store stamped with the micro-batch id.
 
     State is bounded exactly like the text tier: with
@@ -531,100 +584,46 @@ def neardup_embedding_stream_ingest(
     100 TB shape: state is (id, 4-int band rows) + the vectors
     themselves; the candidate join moves ids only."""
     from snowalert_spark.functions.numeric import quantize
-    from snowalert_spark.functions.similarity import (
-        cosine_pairs_rplsh,
-        dot,
-        rplsh_band_rows,
-    )
+    from snowalert_spark.functions.similarity import cosine, rplsh_band_rows
 
     vec_dir = os.path.join(state_dir, "base_vectors")
     bk_dir = os.path.join(state_dir, "base_buckets")
     vec_schema = f"{id_col} long, {vec_col} array<double>, batch_id long"
     bk_schema = f"{id_col} long, b int, h int, batch_id long"
 
-    def _bands(vecs):
-        return rplsh_band_rows(
-            vecs, n_planes, bands, dim, id_col, vec_col
-        ).withColumnRenamed("vid", id_col)
-
     def process(batch: DataFrame, batch_id: int, cached: list) -> None:
         batch = batch.cache()
         cached.append(batch)
-        # -- 1. in-batch near-dup: keep the smaller id per pair ----------
-        near = (
-            cosine_pairs_rplsh(
-                batch, threshold, id_col=id_col, vec_col=vec_col,
-                n_planes=n_planes, bands=bands, dim=dim,
-            )
-            .select(F.col("vec_b").alias(id_col))
-            .distinct()
-        )
-        keep = batch.join(near, id_col, "left_anti").cache()
-        cached.append(keep)
+        # -- 1. sign the batch once --------------------------------------
+        vecs = batch.select(id_col, vec_col)
+        bk = rplsh_band_rows(
+            vecs, n_planes, bands, dim, id_col, vec_col
+        ).withColumnRenamed("vid", id_col).cache()
+        cached.append(bk)
 
-        # -- 2. batch vs accumulated state -------------------------------
+        # -- 2. one candidate join, 3. one verification -------------------
         base_vec = _read_batched_state(
             spark, vec_dir, vec_schema, batch_id, retention_batches
         )
         base_bk = _read_batched_state(
             spark, bk_dir, bk_schema, batch_id, retention_batches
         )
-        bk = _bands(keep)
-        cands = (
-            bk.alias("a")
-            .join(
-                base_bk.alias("b"),
-                (F.col("a.b") == F.col("b.b")) & (F.col("a.h") == F.col("b.h")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias(id_col),
-                F.col(f"b.{id_col}").alias("dup_of"),
-            )
-            .distinct()
-        )
-        sim = quantize(
-            dot("va", "vb") / (F.sqrt(dot("va", "va")) * F.sqrt(dot("vb", "vb"))), 6
-        )
-        dups = (
-            cands.join(
-                keep.select(F.col(id_col), F.col(vec_col).alias("va")), id_col
-            )
-            .join(
-                base_vec.select(
-                    F.col(id_col).alias("dup_of"), F.col(vec_col).alias("vb")
-                ),
-                "dup_of",
-            )
-            .filter(sim >= threshold)
-            .select(id_col)
-            .distinct()
-        )
-        survivors = keep.join(dups, id_col, "left_anti").cache()
-        cached.append(survivors)
+        cands = _candidate_pairs(bk, base_bk, ["b", "h"], id_col)
+        dups = _verified_ids(
+            cands, vecs, base_vec, id_col, vec_col,
+            quantize(cosine("pa", "pb"), 6) >= threshold,
+        ).cache()
+        cached.append(dups)
 
-        # -- 3. publish survivors + their state: per-batch partition
-        # directories with OVERWRITE (idempotent under replay)
-        survivors.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
-        survivors.select(id_col, vec_col).write.mode("overwrite").parquet(
-            _batch_dir(vec_dir, batch_id)
-        )
-        _bands(survivors).write.mode("overwrite").parquet(
-            _batch_dir(bk_dir, batch_id)
+        # -- 4. publish survivors + their state -------------------------
+        _publish_survivors(
+            [(batch, dst_path), (vecs, vec_dir), (bk, bk_dir)], dups, id_col, batch_id
         )
         # drop expired state directories so the stores stay bounded
         if retention_batches is not None:
             _compact_expired_state((vec_dir, bk_dir), batch_id, retention_batches)
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(src_path)
-        .writeStream.foreachBatch(_unpersisting(process))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)
 
 
 def neardup_media_stream_ingest(
@@ -647,11 +646,12 @@ def neardup_media_stream_ingest(
     stream_ingest` (vectors), completing the incremental tier for all
     three modalities. Each arriving file's media rows are dropped when
     their 64-bit perceptual hash is within hamming ``threshold`` of
-    anything already ingested; candidates come from the multi-block
-    composite keys (``dedup.multiblock_key_rows`` — the Manku WWW'07
-    engine the batch tiers share), which are deterministic, so buckets
-    computed in different micro-batches or sessions collide exactly
-    like same-session ones.
+    anything already ingested, or of a smaller id in the same
+    micro-batch; candidates come from the multi-block composite keys
+    (``dedup.multiblock_key_rows`` — the Manku WWW'07 engine the batch
+    tiers share), which are deterministic, so buckets computed in
+    different micro-batches or sessions collide exactly like
+    same-session ones.
 
     ``fingerprint`` maps a micro-batch DataFrame to ``(id_col,
     band_0..band_7)`` rows; default = the image dHash over the
@@ -662,15 +662,24 @@ def neardup_media_stream_ingest(
     mid-stream); the (6,3) default holds chance candidates O(n) to
     ~10^8 rows — start a fresh state dir at (8,5) beyond that.
 
-    Mechanics per micro-batch (``foreachBatch``):
+    Mechanics per micro-batch (``foreachBatch``), the text tier's
+    shape for one payload row per id:
 
-    1. in-batch pass: multi-block candidate/verify pairs inside the
-       batch keep the smaller ``id_col`` per verified pair;
-    2. batch-vs-state: the batch's key rows equi-join the persisted
-       base keys on (ci, kv) — the accumulated corpus is NEVER
-       re-hashed or all-paired — then candidates popcount-verify
-       against the persisted base hash bytes; matches are dropped;
-    3. survivors publish to ``dst_path``; their hash rows + key rows
+    1. the batch is hashed ONCE (checkpointed), and exact copies keep
+       the smallest ``id_col`` per hash, as the text tier does per
+       ``md5(text)``: hamming 0 always verifies, so the drop set is the
+       same, and a re-upload-heavy tick sends one id per distinct hash
+       on (the batch engine's exact collapse). Only a LARGER id is a
+       copy: rows that repeat the smallest id with its hash all stay,
+       as the batch engine never pairs an id with itself;
+    2. one candidate join (:func:`_candidate_pairs`) of the kept rows'
+       composite keys on (ci, kv) against the batch's smaller ids and
+       the persisted keys — the accumulated corpus is NEVER re-hashed
+       or all-paired;
+    3. one verification (:func:`_verified_ids`): popcount hamming
+       within ``threshold`` of the match's hash bytes, from the side
+       the candidate came from, drops a row;
+    4. survivors publish to ``dst_path``; their hash rows + key rows
        land in the state stores.
 
     Retention, crash safety, and state layout follow the other two
@@ -681,11 +690,7 @@ def neardup_media_stream_ingest(
     (id, 8 bytes) + C(blocks,combo) longs per row — payloads never
     enter the stream's state or shuffles."""
     from snowalert_spark.functions import multimodal as MM
-    from snowalert_spark.functions.dedup import (
-        hamming_bd,
-        hamming_pairs_multiblock,
-        multiblock_key_rows,
-    )
+    from snowalert_spark.functions.dedup import hamming_bd, multiblock_key_rows
 
     if blocks - combo < threshold:
         raise ValueError(
@@ -703,84 +708,44 @@ def neardup_media_stream_ingest(
     def process(batch: DataFrame, batch_id: int, cached: list) -> None:
         batch = batch.cache()
         cached.append(batch)
+        # -- 1. hash once; exact copies keep the smallest id --------------
+        bd = F.array(*[F.col(f"band_{r}") for r in range(8)])
         hashed = fingerprint(batch).select(
             id_col,
-            F.array(*[F.col(f"band_{r}") for r in range(8)]).alias("bd"),
-        ).localCheckpoint()  # hash once: 3 consumers below
+            bd.alias("bd"),
+            (F.col(id_col) > F.min(id_col).over(Window.partitionBy(bd)))
+            .alias("copy"),
+        ).localCheckpoint()
+        keep_h = hashed.filter(~F.col("copy")).select(id_col, "bd")
 
-        # -- 1. in-batch near-dup: keep the smaller id per pair ----------
-        eight = hashed.select(
-            id_col, *[F.col("bd")[r].alias(f"band_{r}") for r in range(8)]
-        )
-        near = (
-            hamming_pairs_multiblock(
-                eight, threshold, blocks=blocks, combo=combo, id_col=id_col
-            )
-            .select(F.col("dup_of").alias(id_col))
-            .distinct()
-        )
-        keep = batch.join(near, id_col, "left_anti").cache()
-        cached.append(keep)
-        keep_h = hashed.join(near, id_col, "left_anti")
-
-        # -- 2. batch vs accumulated state -------------------------------
+        # -- 2. one candidate join, 3. one verification -------------------
         base_h = _read_batched_state(
             spark, hash_dir, hash_schema, batch_id, retention_batches
         )
         base_k = _read_batched_state(
             spark, key_dir, key_schema, batch_id, retention_batches
         )
-        bk = multiblock_key_rows(keep_h, blocks, combo, id_col)
-        cands = (
-            bk.alias("a")
-            .join(
-                base_k.alias("b"),
-                (F.col("a.ci") == F.col("b.ci"))
-                & (F.col("a.kv") == F.col("b.kv")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias(id_col),
-                F.col(f"b.{id_col}").alias("dup_of"),
-            )
-            .distinct()
-        )
+        keys = multiblock_key_rows(keep_h, blocks, combo, id_col)
+        cands = _candidate_pairs(keys, base_k, ["ci", "kv"], id_col)
         dups = (
-            cands.join(
-                keep_h.select(id_col, F.col("bd").alias("ba")), id_col
+            _verified_ids(
+                cands, keep_h, base_h, id_col, "bd",
+                hamming_bd("pa", "pb") <= threshold,
             )
-            .join(
-                base_h.select(
-                    F.col(id_col).alias("dup_of"), F.col("bd").alias("bb")
-                ),
-                "dup_of",
-            )
-            .filter(hamming_bd("ba", "bb") <= threshold)
-            .select(id_col)
-            .distinct()
+            .unionByName(hashed.filter("copy").select(id_col))
+            .cache()
         )
-        survivors = keep.join(dups, id_col, "left_anti").cache()
-        cached.append(survivors)
+        cached.append(dups)
 
-        # -- 3. publish survivors + their state (per-batch overwrite) ----
-        survivors.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
-        surv_h = hashed.join(survivors.select(id_col), id_col, "left_semi")
-        surv_h.write.mode("overwrite").parquet(_batch_dir(hash_dir, batch_id))
-        multiblock_key_rows(surv_h, blocks, combo, id_col).write.mode(
-            "overwrite"
-        ).parquet(_batch_dir(key_dir, batch_id))
+        # -- 4. publish survivors + their state -------------------------
+        _publish_survivors(
+            [(batch, dst_path), (keep_h, hash_dir), (keys, key_dir)],
+            dups, id_col, batch_id,
+        )
         if retention_batches is not None:
             _compact_expired_state((hash_dir, key_dir), batch_id, retention_batches)
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(src_path)
-        .writeStream.foreachBatch(_unpersisting(process))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)
 
 
 #: per-bucket ceiling on the tick membership probe's BUILD side (the
@@ -1244,16 +1209,7 @@ def substring_stream_ingest(
         if retention_batches is not None:
             state.expire(batch_id, retention_batches)
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(src_path)
-        .writeStream.foreachBatch(_unpersisting(process))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)
 
 
 def file_stream_ingest(
@@ -1269,10 +1225,7 @@ def file_stream_ingest(
     parquet landing dir. ``availableNow`` processes the backlog and
     stops — the reference's 1-minute task cadence is the scheduler's
     job, not the stream's."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    stream = reader.load(src_path)
+    stream = _reader(spark, fmt, schema).load(src_path)
     if transform is not None:
         stream = transform(stream)
     q = (
@@ -1306,10 +1259,11 @@ def file_stream_ingest_continuous(
     scheduler owns the cadence. At cluster scale the same code runs
     against an object-store prefix; ``maxFilesPerTrigger`` bounds a
     tick's intake so one giant backlog can't blow a micro-batch."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    stream = reader.option("maxFilesPerTrigger", "1000").load(src_path)
+    stream = (
+        _reader(spark, fmt, schema)
+        .option("maxFilesPerTrigger", "1000")
+        .load(src_path)
+    )
     if transform is not None:
         stream = transform(stream)
     return (
@@ -1448,16 +1402,7 @@ def curation_stream_ingest(
                 .parquet(_batch_dir(audit_dir, batch_id))
             )
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(src_path)
-        .writeStream.foreachBatch(_unpersisting(process))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)
 
 
 def semantic_decontam_stream_ingest(
@@ -1517,16 +1462,7 @@ def semantic_decontam_stream_ingest(
         )
         keeps.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(src_path)
-        .writeStream.foreachBatch(_unpersisting(process))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)
 
 
 def bpe_encode_stream_ingest(
@@ -1564,19 +1500,10 @@ def bpe_encode_stream_ingest(
 
     merges = list(merges)
 
-    def process(batch: DataFrame, batch_id: int) -> None:
+    def process(batch: DataFrame, batch_id: int, cached: list) -> None:
         out = encode_docs_via_vocab(
             batch, merges, id_col=id_col, text_col=text_col
         )
         out.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(src_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(spark, src_path, fmt, schema, checkpoint, process)

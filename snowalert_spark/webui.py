@@ -217,8 +217,8 @@ class WebApi:
 
     # ---- /api/sa/data (webui/api/data.py:50-116) -------------------------
     def get_data(self, environ) -> dict:
-        # ``connectors`` keeps the original map shape (webui_pages renders
-        # from it); ``connector_specs`` mirrors the reference payload the
+        # ``connectors`` keeps the original name -> options map shape;
+        # ``connector_specs`` mirrors the reference payload the
         # SPA consumes — one entry per connector with its options, the
         # module docstring, and whether finalize/test stages exist
         # (reference: src/connectors/__init__.py:65-77 builds the same

@@ -24,8 +24,7 @@ Serve with::
 
 ``WebSPA`` mounts the JSON API under ``/api/`` and serves the app
 shell everywhere else, so deep links (``/app/#/alerts/FOO_ALERT_QUERY``)
-always resolve. It composes with ``WebPages`` — mount one per prefix —
-but each is a complete UI on its own.
+always resolve.
 """
 
 from __future__ import annotations

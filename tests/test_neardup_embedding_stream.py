@@ -12,6 +12,7 @@ import json
 import math
 import os
 
+import pytest
 from pyspark.sql import types as T
 
 from snowalert_spark.streaming import neardup_embedding_stream_ingest
@@ -140,3 +141,92 @@ def test_matches_batch_rplsh_operator(spark, tmp_path):
         [d for d, _ in f1] + [d for d, _ in f2 if d not in flagged]
     )
     assert _out_ids(spark, tmp) == expected
+
+
+def _turn(a: list[float], toward: list[float], deg: float) -> list[float]:
+    """``a`` rotated by ``deg`` degrees in the plane it spans with
+    ``toward``: the cosine between the two is exactly cos(deg)."""
+    d = sum(x * t for x, t in zip(a, toward))
+    p = [t - d * x for x, t in zip(a, toward)]
+    n = math.sqrt(sum(x * x for x in p))
+    r = math.radians(deg)
+    return [math.cos(r) * x + math.sin(r) * y / n for x, y in zip(a, p)]
+
+
+# in-batch chain 1 < 2 < 3 at 0, 6 and 12 degrees: 2 ~ 1 and 3 ~ 2
+# (cosine 0.9945), but 3 vs 1 is 0.978 — a chain the smaller-id rule
+# cuts at both links
+CHAIN = _unit(21)
+CHAIN2 = _turn(CHAIN, _unit(22), 6)
+CHAIN3 = _turn(CHAIN, _unit(22), 12)
+
+# split name -> (files in arrival order, surviving ids); the two-file
+# split is test_matches_batch_rplsh_operator
+SPLITS = {
+    # chain, exact copies in-batch and across batches, a same-id
+    # re-delivery of a near vector, and a later exact copy of a vector
+    # the first batch dropped (state holds survivors only)
+    "chain_redelivery_exact": ([
+        [(1, CHAIN), (2, CHAIN2), (3, CHAIN3), (4, _unit(23)),
+         (5, _unit(24)), (7, _unit(24))],
+        [(4, _near(_unit(23))), (8, _unit(24)), (10, CHAIN3),
+         (11, _unit(25))],
+    ], [1, 4, 5, 10, 11]),
+}
+
+
+def _batch_operator_survivors(spark, files):
+    """Per file in arrival order: drop the larger id of every
+    cosine_pairs_rplsh pair among the file's vectors together with the
+    earlier files' survivors. The survivors join re-keyed to negative
+    ids, so every cross pair has its batch vector on the larger side,
+    a re-delivered id included."""
+    from snowalert_spark.functions.similarity import cosine_pairs_rplsh
+
+    survivors = []
+    for rows in files:
+        both = spark.createDataFrame(
+            rows + [(-1 - d, v) for d, v in survivors],
+            "vec_id long, embedding array<double>",
+        )
+        drop = {
+            r["vec_b"]
+            for r in cosine_pairs_rplsh(
+                both, 0.99, n_planes=16, bands=4, dim=DIM
+            ).collect()
+            if r["vec_b"] >= 0
+        }
+        survivors += [(d, v) for d, v in rows if d not in drop]
+    return sorted(d for d, _ in survivors)
+
+
+@pytest.mark.parametrize("split", sorted(SPLITS))
+def test_matches_batch_operator(spark, tmp_path, split):
+    """One micro-batch pass agrees with the batch pair finder file by
+    file: a vector is dropped when it pairs with a smaller id of its own
+    file or with anything an earlier file kept."""
+    tmp = str(tmp_path)
+    files, want = SPLITS[split]
+    for i, rows in enumerate(files):
+        _write(f"{tmp}/src", f"f{i}.json", rows)
+        _run(spark, tmp)
+    expected = _batch_operator_survivors(spark, files)
+    assert expected == want  # the split exercises what it says it does
+    assert _out_ids(spark, tmp) == expected
+
+
+def test_micro_batch_job_budget(spark, tmp_path, last_job_id):
+    """A micro-batch against existing state signs the batch once and
+    runs one candidate join and one verification: its Spark job count
+    stays under the budget (a separate in-batch pair pass ahead of the
+    state pass ran 24 jobs here)."""
+    tmp = str(tmp_path)
+    a, b = _unit(1), _unit(2)
+    _write(f"{tmp}/src", "f1.json", [(1, a), (2, b)])
+    _run(spark, tmp)
+    _write(f"{tmp}/src", "f2.json", [(3, _near(a)), (4, _unit(9))])
+    before = last_job_id()
+    _run(spark, tmp)
+    jobs = last_job_id() - before
+    assert _out_ids(spark, tmp) == [1, 2, 4]
+    assert jobs <= 21, f"second micro-batch ran {jobs} Spark jobs"

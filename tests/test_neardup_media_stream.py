@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,24 +50,24 @@ def _fingerprint(batch):
     return MM.image_dhash(media, decode="fake")
 
 
-def _write(src, name, rows):
+def _write(src, name, rows, col="text"):
     os.makedirs(src, exist_ok=True)
     with open(os.path.join(src, name), "w") as f:
-        for media_id, text in rows:
-            f.write(json.dumps({"media_id": media_id, "text": text}) + "\n")
+        for media_id, payload in rows:
+            f.write(json.dumps({"media_id": media_id, col: payload}) + "\n")
 
 
-def _run(spark, tmp, retention=None):
+def _run(spark, tmp, retention=None, schema=SCHEMA, fingerprint=_fingerprint):
     neardup_media_stream_ingest(
         spark,
         src_path=f"{tmp}/src",
         dst_path=f"{tmp}/out",
         checkpoint=f"{tmp}/ckpt",
         state_dir=f"{tmp}/state",
-        schema=SCHEMA,
+        schema=schema,
         threshold=3,
         retention_batches=retention,
-        fingerprint=_fingerprint,
+        fingerprint=fingerprint,
     )
 
 
@@ -145,3 +146,106 @@ def test_matches_batch_multiblock_operator(spark, tmp_path):
         [d for d, _ in f1] + [d for d, _ in f2 if d not in flagged]
     )
     assert _out_ids(spark, tmp) == expected
+
+
+HASH_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("h", T.LongType()),
+    ]
+)
+
+
+def _hash_bytes(batch):
+    """fingerprint of a stream that carries its 64-bit hash as ``h``:
+    the hash's eight bytes, high byte first."""
+    return batch.select(
+        "media_id",
+        *[
+            F.shiftright("h", 8 * (7 - r)).bitwiseAND(255).cast("int").alias(f"band_{r}")
+            for r in range(8)
+        ],
+    )
+
+
+# in-batch chain 1 < 2 < 3: each hash is its predecessor with three
+# low bits flipped, so 2 ~ 1 and 3 ~ 2 at hamming 3, but 3 vs 1 is
+# hamming 6 — a chain the smaller-id rule cuts at both links
+CHAIN = 0x0123456789ABCDEF
+CHAIN2 = CHAIN ^ 0b111
+CHAIN3 = CHAIN2 ^ 0b111000
+X, Y, Z = 0x5A17C0FFEE00D1CE, 0x3E8B9D2F61A4C705, 0x7FD0413B29E6A88C
+
+# split name -> (files in arrival order, surviving ids); the two-file
+# split is test_matches_batch_multiblock_operator
+SPLITS = {
+    # chain, exact copies in-batch and across batches, a same-id
+    # re-delivery of a near hash, and a later exact copy of a hash the
+    # first batch dropped (state holds survivors only)
+    "chain_redelivery_exact": ([
+        [(1, CHAIN), (2, CHAIN2), (3, CHAIN3), (4, X), (5, Y), (7, Y)],
+        [(4, X ^ 1), (8, Y), (10, CHAIN3), (11, Z)],
+    ], [1, 4, 5, 10, 11]),
+    # one file carries the same (id, hash) twice next to a larger-id
+    # exact copy: both rows of the smallest id stay, only the larger id
+    # is a copy; the id's later re-delivery matches its own state row
+    "same_id_twice": ([
+        [(1, X), (6, Y), (6, Y), (8, Y), (9, Z)],
+        [(6, Y), (12, X ^ 1)],
+    ], [1, 6, 6, 9]),
+}
+
+
+def _batch_operator_survivors(spark, files):
+    """Per file in arrival order: drop the larger id of every
+    hamming_pairs_multiblock pair among the file's hashes together with
+    the earlier files' survivors. The survivors join re-keyed to
+    negative ids, so every cross pair has its batch hash on the larger
+    side, a re-delivered id included."""
+    from snowalert_spark.functions.dedup import hamming_pairs_multiblock
+
+    survivors = []
+    for rows in files:
+        both = spark.createDataFrame(
+            rows + [(-1 - d, h) for d, h in survivors], "media_id long, h long"
+        )
+        drop = {
+            r["dup_of"]
+            for r in hamming_pairs_multiblock(
+                _hash_bytes(both), 3, blocks=6, combo=3
+            ).collect()
+            if r["dup_of"] >= 0
+        }
+        survivors += [(d, h) for d, h in rows if d not in drop]
+    return sorted(d for d, _ in survivors)
+
+
+@pytest.mark.parametrize("split", sorted(SPLITS))
+def test_matches_batch_operator(spark, tmp_path, split):
+    """One micro-batch pass agrees with the batch multi-block engine
+    file by file: a hash is dropped when it pairs with a smaller id of
+    its own file or with anything an earlier file kept."""
+    tmp = str(tmp_path)
+    files, want = SPLITS[split]
+    for i, rows in enumerate(files):
+        _write(f"{tmp}/src", f"f{i}.json", rows, col="h")
+        _run(spark, tmp, schema=HASH_SCHEMA, fingerprint=_hash_bytes)
+    expected = _batch_operator_survivors(spark, files)
+    assert expected == want  # the split exercises what it says it does
+    assert _out_ids(spark, tmp) == expected
+
+
+def test_micro_batch_job_budget(spark, tmp_path, last_job_id):
+    """A micro-batch against existing state hashes the batch once and
+    runs one candidate join and one verification: its Spark job count
+    stays under the budget (a separate in-batch pair pass ahead of the
+    state pass ran 37 jobs here)."""
+    tmp = str(tmp_path)
+    _write(f"{tmp}/src", "f1.json", [(1, BASE), (2, OTHER)])
+    _run(spark, tmp)
+    _write(f"{tmp}/src", "f2.json", [(3, NEAR), (4, FRESH)])
+    before = last_job_id()
+    _run(spark, tmp)
+    jobs = last_job_id() - before
+    assert _out_ids(spark, tmp) == [1, 2, 4]
+    assert jobs <= 28, f"second micro-batch ran {jobs} Spark jobs"

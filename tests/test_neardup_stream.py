@@ -177,18 +177,11 @@ def test_matches_batch_operator(spark, tmp_path, split):
     assert _out_ids(spark, tmp) == expected
 
 
-def test_micro_batch_job_budget(spark, tmp_path):
+def test_micro_batch_job_budget(spark, tmp_path, last_job_id):
     """A micro-batch against existing state runs one candidate join and
     one verification over a once-shingled batch: its Spark job count
     stays under the budget (two separate in-batch and state passes, each
     shingling and bucketing the batch again, ran 41 jobs here)."""
-    jsc = spark.sparkContext._jsc.sc()
-
-    def last_job_id():
-        jsc.listenerBus().waitUntilEmpty(10_000)
-        jobs = jsc.statusStore().jobsList(None)
-        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
     tmp = str(tmp_path)
     _write(f"{tmp}/src", "f1.json", [(1, BASE), (2, OTHER)])
     _run(spark, tmp)

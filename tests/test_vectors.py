@@ -587,3 +587,26 @@ def test_trained_centroid_rows_multi_uses_the_validated_key(spark, monkeypatch):
         assert got == [S._CENTROID_CACHE[(cv, 4, 1)]] and got[0]
     finally:
         S._CENTROID_CACHE.pop((cv, 4, 1), None)
+
+
+def test_empty_codebook_raises_naming_the_corpus_version(spark, monkeypatch):
+    """A group whose training yields no centroid (here: no init ids
+    below k) raises, naming its corpus version, instead of caching and
+    publishing an empty codebook; the group trained beside it in the
+    same fused call is not cached either."""
+    monkeypatch.delenv("SNOWALERT_MODEL_DIR", raising=False)
+    train = table(spark, SF, "embeddings").filter(F.col("vec_id") < 32)
+    no_init = train.filter(F.col("vec_id") >= 4)
+    good, bad = f"{SF}#good", f"{SF}#no-init"
+    try:
+        with pytest.raises(ValueError, match=bad):
+            S.trained_centroid_rows(spark, bad, no_init, k=4, iters=1)
+        with pytest.raises(ValueError, match=bad):
+            S.trained_centroid_rows_multi(
+                spark, [(good, train), (bad, no_init)], k=4, iters=1
+            )
+        assert (bad, 4, 1) not in S._CENTROID_CACHE
+        assert (good, 4, 1) not in S._CENTROID_CACHE
+    finally:
+        for cv in (good, bad):
+            S._CENTROID_CACHE.pop((cv, 4, 1), None)

@@ -124,7 +124,7 @@ def test_get_data_connector_specs():
     assert specs["plain"]["finalize"] is False
     assert specs["fake"]["options"][1]["secret"] is True
     assert specs["fake"]["docstring"] == "fake connector module"
-    # the legacy map shape survives for webui_pages
+    # the original name -> options map shape survives beside the specs
     assert data["connectors"]["plain"] == PlainConnector.CONNECTION_OPTIONS
 
 
@@ -254,8 +254,8 @@ def test_spa_client_executes_every_route(tmp_path):
 def test_serve_webui_cli_target():
     """`python -m snowalert_spark.run webui` analog (reference: ./run
     webui → webui/app.py): serve_webui builds the app over a live
-    registry + default connector set and serves real HTTP; both UI
-    flavors mount the same JSON API."""
+    registry + default connector set and serves the SPA shell and its
+    JSON API over real HTTP."""
     import threading
     import urllib.request
 
@@ -264,25 +264,24 @@ def test_serve_webui_cli_target():
     reg = RuleRegistry()
     reg.create("CLI_SMOKE_ALERT_QUERY", sql="SELECT 'u' AS actor",
                comment="cli smoke")
-    for ui, marker in (("spa", b"spa-root"), ("pages", b"<nav>")):
-        srv = serve_webui(None, reg, host="127.0.0.1", port=0, ui=ui,
-                          secret=SECRET, serve=False)
-        t = threading.Thread(target=srv.serve_forever, daemon=True)
-        t.start()
-        try:
-            base = f"http://127.0.0.1:{srv.server_port}"
-            page = urllib.request.urlopen(f"{base}/", timeout=10).read()
-            assert marker in page
-            req = urllib.request.Request(
-                f"{base}/api/sa/rules?target=ALERT",
-                headers={"Cookie": f"sid={SECRET}"})
-            rules = json.loads(urllib.request.urlopen(req, timeout=10).read())
-            assert [r["title"] for r in rules["rules"]] == ["CLI_SMOKE"]
-            # the default connector set exposes okta with its options
-            data = json.loads(urllib.request.urlopen(
-                f"{base}/api/sa/data", timeout=10).read())
-            assert "okta" in data["connectors"]
-            assert any(s["connector"] == "okta"
-                       for s in data["connector_specs"])
-        finally:
-            srv.shutdown()
+    srv = serve_webui(None, reg, host="127.0.0.1", port=0, secret=SECRET,
+                      serve=False)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_port}"
+        page = urllib.request.urlopen(f"{base}/", timeout=10).read()
+        assert b"spa-root" in page
+        req = urllib.request.Request(
+            f"{base}/api/sa/rules?target=ALERT",
+            headers={"Cookie": f"sid={SECRET}"})
+        rules = json.loads(urllib.request.urlopen(req, timeout=10).read())
+        assert [r["title"] for r in rules["rules"]] == ["CLI_SMOKE"]
+        # the default connector set exposes okta with its options
+        data = json.loads(urllib.request.urlopen(
+            f"{base}/api/sa/data", timeout=10).read())
+        assert "okta" in data["connectors"]
+        assert any(s["connector"] == "okta"
+                   for s in data["connector_specs"])
+    finally:
+        srv.shutdown()
