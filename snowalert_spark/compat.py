@@ -257,12 +257,6 @@ def _rewrite_flatten_level(sql: str, counter: list[int]) -> str:
         sql = sql[:ins] + lview + sql[ins:]
 
 
-def rewrite_flatten(sql: str) -> str:
-    """Standalone FLATTEN rewrite (single scope). ``transpile`` applies
-    the scope-recursive version; this is kept for direct use/tests."""
-    return _rewrite_flatten_level(sql, [0])
-
-
 # --------------------------------------------------------------------------
 # Variant paths
 # --------------------------------------------------------------------------

@@ -316,16 +316,6 @@ def _signature_aggs(n_hashes: int) -> list:
     return aggs
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = 24, k: int = 3) -> DataFrame:
-    """(doc_id, mh_0 … mh_{n-1}): MinHash signature in WIDE form.
-
-    One md5 per shingle (the 32-bit base hash), then the affine
-    permutation family h_i = (A_i·h + B_i) mod P as n_hashes cheap MIN
-    aggregates — no seed-explosion, one shuffle keyed on doc_id."""
-    sh = doc_shingles(docs, k).select("doc_id", base_hash32(F.col("s")).alias("h"))
-    return sh.groupBy("doc_id").agg(*_signature_aggs(n_hashes))
-
-
 def minhash_band_buckets(
     signatures: DataFrame, n_hashes: int = 24, rows_per_band: int = 4
 ) -> DataFrame:
@@ -353,6 +343,59 @@ def minhash_band_buckets(
     )
 
 
+def _shingle_buckets(
+    sh: DataFrame, n_hashes: int, rows_per_band: int, id_col: str = "doc_id"
+) -> DataFrame:
+    """The one MinHash bucket builder: shingle rows ``(id_col, s)`` →
+    ``(id_col, band, band_hash)``. One md5 per shingle (the 32-bit base
+    hash), then the affine permutation family h_i = (A_i·h + B_i) mod P
+    as ``n_hashes`` cheap MIN aggregates (no seed explosion, one
+    shuffle keyed on the id), then the bands. Serves the batch
+    operators and the streaming text tier alike, so buckets built in
+    different micro-batches, sessions or snapshots collide exactly."""
+    sigs = (
+        sh.select(F.col(id_col).alias("doc_id"), base_hash32(F.col("s")).alias("h"))
+        .groupBy("doc_id")
+        .agg(*_signature_aggs(n_hashes))
+    )
+    return minhash_band_buckets(sigs, n_hashes, rows_per_band).withColumnRenamed(
+        "doc_id", id_col
+    )
+
+
+def _verified_jaccard(
+    cands: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+    a: str,
+    b: str,
+) -> DataFrame:
+    """The one exact shingle-Jaccard verifier: candidate pairs ``(a,
+    b)`` → ``(a, b, jaccard)`` for the pairs at or above ``threshold``.
+    ``a`` ids are shingled in ``sh_a``, ``b`` ids in ``sh_b`` (both
+    ``(doc_id, s)``). Only candidates touch the shingle join; set
+    sizes are one count aggregate per side."""
+    na = sh_a.groupBy("doc_id").agg(F.count("*").alias("na"))
+    nb = sh_b.groupBy("doc_id").agg(F.count("*").alias("nb"))
+    common = (
+        cands.join(sh_a.select(F.col("doc_id").alias(a), F.col("s").alias("sa")), a)
+        .join(
+            sh_b.select(F.col("doc_id").alias("_b"), F.col("s").alias("sb")),
+            (F.col(b) == F.col("_b")) & (F.col("sa") == F.col("sb")),
+        )
+        .groupBy(a, b)
+        .agg(F.count("*").alias("c"))
+    )
+    j = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
+    return (
+        common.join(na.withColumnRenamed("doc_id", a), a)
+        .join(nb.withColumnRenamed("doc_id", b), b)
+        .select(a, b, quantize(j, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -366,18 +409,17 @@ def minhash_lsh_pairs(
     With 24 hashes / 6 bands of 4: P(candidate | j=0.8) ≈ 0.96,
     P(candidate | j=0.15 background) ≈ 0.3%, and every candidate is
     exact-verified, so false positives are eliminated — output is a
-    deterministic subset of ngram_jaccard_pairs."""
+    deterministic subset of ngram_jaccard_pairs. Buckets come from
+    :func:`_shingle_buckets` and verification from
+    :func:`_verified_jaccard`, the cores :func:`cross_snapshot_minhash`
+    shares."""
     # one cached shingle index feeds signatures, sizes and verification
     sh = doc_shingles(docs, k).cache()
-    sigs = sh.select("doc_id", base_hash32(F.col("s")).alias("h")).groupBy(
-        "doc_id"
-    ).agg(*_signature_aggs(n_hashes))
-    buckets = minhash_band_buckets(sigs, n_hashes, rows_per_band)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
+    buckets = _shingle_buckets(sh, n_hashes, rows_per_band)
     cands = (
-        a.join(
-            b,
+        buckets.alias("a")
+        .join(
+            buckets.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
@@ -385,22 +427,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ia = sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa"))
-    ib = sh.select(F.col("doc_id").alias("doc_b2"), F.col("s").alias("sb"))
-    common = (
-        cands.join(ia, "doc_a")
-        .join(ib, (F.col("doc_b") == F.col("doc_b2")) & (F.col("sa") == F.col("sb")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-    )
-    j = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        common.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select("doc_a", "doc_b", quantize(j, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verified_jaccard(cands, sh, sh, threshold, "doc_a", "doc_b")
 
 
 def cross_snapshot_minhash(
@@ -419,8 +446,9 @@ def cross_snapshot_minhash(
 
     The companion to :func:`cross_snapshot_dedup` (exact keys): a
     crawl pipeline runs the exact pass first, then this pass catches
-    boilerplate-mutated recrawls. Scale shape mirrors
-    :func:`minhash_lsh_pairs` — signatures are per-side one-shuffle
+    boilerplate-mutated recrawls. Same cores as
+    :func:`minhash_lsh_pairs` (:func:`_shingle_buckets`, then
+    :func:`_verified_jaccard`): signatures are per-side one-shuffle
     aggregations, candidates come from an equi-join on
     (band, band_hash) which at 100 TB is hash-partitioned with the
     base side's buckets reusable across snapshots (compute once,
@@ -438,17 +466,8 @@ def cross_snapshot_minhash(
     """
     shb = doc_shingles(batch, k).cache()
     shB = doc_shingles(base, k).cache()
-
-    def _buckets(sh):
-        sigs = (
-            sh.select("doc_id", base_hash32(F.col("s")).alias("h"))
-            .groupBy("doc_id")
-            .agg(*_signature_aggs(n_hashes))
-        )
-        return minhash_band_buckets(sigs, n_hashes, rows_per_band)
-
-    a = _buckets(shb).alias("a")
-    b = _buckets(shB).alias("b")
+    a = _shingle_buckets(shb, n_hashes, rows_per_band).alias("a")
+    b = _shingle_buckets(shB, n_hashes, rows_per_band).alias("b")
     cands = (
         a.join(
             b,
@@ -458,25 +477,7 @@ def cross_snapshot_minhash(
         .select(F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("dup_of"))
         .distinct()
     )
-    na_ = shb.groupBy("doc_id").agg(F.count("*").alias("na"))
-    nb_ = shB.groupBy("doc_id").agg(F.count("*").alias("nb")).withColumnRenamed(
-        "doc_id", "dup_of"
-    )
-    ia = shb.select(F.col("doc_id"), F.col("s").alias("sa"))
-    ib = shB.select(F.col("doc_id").alias("dup_of2"), F.col("s").alias("sb"))
-    common = (
-        cands.join(ia, "doc_id")
-        .join(ib, (F.col("dup_of") == F.col("dup_of2")) & (F.col("sa") == F.col("sb")))
-        .groupBy("doc_id", "dup_of")
-        .agg(F.count("*").alias("c"))
-    )
-    j = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        common.join(na_, "doc_id")
-        .join(nb_, "dup_of")
-        .select("doc_id", "dup_of", quantize(j, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verified_jaccard(cands, shb, shB, threshold, "doc_id", "dup_of")
 
 
 def simhash_fingerprints(docs: DataFrame, bits: int = 32, k: int = 3) -> DataFrame:
@@ -923,6 +924,22 @@ def video_framehash_clusters(
 CC_DRIVER_MAX_EDGES = 1_000_000
 
 
+def _both_ways(edges: DataFrame) -> DataFrame:
+    """Every ``(a, b)`` edge in both directions, from one projection.
+    The self-union ``edges ∪ (edges with a, b swapped)`` is the obvious
+    form, but Catalyst's Union constraint rewrite fails on it with
+    ``NoSuchElementException: key not found: b`` when ``edges`` carries
+    filter constraints (e.g. a filtered ``spark.range`` graph)."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct("a", "b"),
+                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
+            )
+        ).alias("e")
+    ).select("e.a", "e.b")
+
+
 def _cc_driver_union_find(spark, sym: DataFrame) -> DataFrame:
     """Driver-side union-find over a bounded edge list. The input may
     be raw directed pairs with duplicates — union(a, b) is symmetric
@@ -1011,11 +1028,7 @@ def connected_components(
         # skips the 2|E|-row distinct exchange entirely: materialize
         # the raw verified pairs once, stream them to the driver
         return _cc_driver_union_find(edges.sparkSession, e)
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _both_ways(e).distinct().localCheckpoint()
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -1103,20 +1116,11 @@ def connected_components_star(
         )
         .filter(F.col("a") != F.col("b"))
     )
-    cur = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    cur = _both_ways(e).distinct().localCheckpoint()
     if cur.isEmpty():
         return cur.select(
             F.col("a").alias("node"), F.col("b").alias("cluster_id")
         )
-
-    def _sym(frame: DataFrame) -> DataFrame:
-        return frame.union(
-            frame.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct()
 
     def _with_min(sym: DataFrame) -> DataFrame:
         mn = sym.groupBy("a").agg(F.min("b").alias("mb"))
@@ -1126,7 +1130,7 @@ def connected_components_star(
 
     for _ in range(max_iter):
         # large-star: (u, m(v)) for u in Γ(v), u > v
-        g = _with_min(_sym(cur))
+        g = _with_min(_both_ways(cur).distinct())
         large = (
             g.filter(F.col("b") > F.col("a"))
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
@@ -1134,7 +1138,7 @@ def connected_components_star(
         )
         # small-star over the large-star output: (u, m(v)) for
         # u in Γ(v) ∪ {v}, u <= v, u != m(v)
-        g2 = _with_min(_sym(large.distinct()))
+        g2 = _with_min(_both_ways(large.distinct()).distinct())
         small_nbrs = g2.filter(F.col("b") <= F.col("a")).select(
             F.col("b").alias("u"), F.col("m")
         )
@@ -1172,17 +1176,9 @@ def connected_components_star(
 
 # --- substring-level dedup (Lee et al. arXiv:2107.06499) --------------
 #
-# Hot-fingerprint skew note (r13): the r10-r12 implementations carried
-# an explicit (h, salt)-bucketed repartition of the expanded
-# fingerprint stream. Measurement showed both of its consumers are
-# partitioning-indifferent — the per-hash totals PARTIAL-aggregate
-# map-side (a boilerplate hash collapses to one row per input
-# partition before any shuffle) and the position probe joins the tiny
-# repeated-hash table back by AQE broadcast — so the explicit exchange
-# only moved the whole stream twice. Skew protection is now adaptive:
-# map-side combine for the count, AQE skew-join splitting for the
-# sort-merge fallback when a pathological corpus makes the repeated
-# table too big to broadcast.
+# One operator (dedupe_substrings) and one per-doc step
+# (_substring_rows) serve the spans and removal projections, the
+# cross-snapshot operator and the streaming substring tier.
 
 #: winnowing window (grams per selection window) for the stride
 #: prefilter: selected density ~2/(w+1), i.e. ~8x less fingerprint
@@ -1195,7 +1191,7 @@ def _window_fingerprints(
 ) -> DataFrame:
     """``(doc_id, pos, h)`` — a 128-bit fingerprint of every stride-1
     length-``L`` window of every doc (docs shorter than L emit
-    nothing). The O(corpus chars) stream both substring operators are
+    nothing). The O(corpus chars) stream every substring operator is
     built on.
 
     The fingerprint is a struct of two xxhash64 passes under distinct
@@ -1245,43 +1241,6 @@ def _window_fingerprints(
             )
         ).alias("w"),
     ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h"))
-
-
-def _repeated_positions(
-    wins: DataFrame, min_count: int, exclude_first: bool = False
-) -> DataFrame:
-    """``(doc_id, pos)`` of windows whose fingerprint occurs >=
-    ``min_count`` times corpus-wide. Per-hash totals come straight off
-    the fingerprint stream via a partial-combined groupBy — map-side
-    combine collapses a hot boilerplate fingerprint to one row per
-    input partition before anything shuffles, so the count cannot
-    skew and the stream itself is never repartitioned for it. The
-    totals relation is restricted to hashes at the threshold (tiny in
-    the mostly-unique common case), so the position probe joins it
-    back as an AQE broadcast — no corpus-sized exchange on either
-    side. If a pathologically duplicated corpus ever pushes the
-    repeated-hash table past the broadcast threshold, the planner
-    falls back to a sort-merge join whose skewed probe partitions AQE
-    splits at runtime (skewJoin.enabled) — the adaptive form of the
-    static (h, salt) salting this replaces (r13: the explicit salted
-    repartition shuffled the whole expanded stream TWICE — once per
-    consumer — only to feed a broadcast join and a
-    partitioning-indifferent aggregate; removing it cut two
-    full-stream exchanges from every substring operator).
-    ``exclude_first`` drops the globally-first occurrence per
-    fingerprint (min (doc_id, pos) — identical to the previous rank-1
-    exclusion), the removal operator's keep-one rule; the min-struct
-    aggregate is only computed when that rule needs it."""
-    aggs = [F.count(F.lit(1)).alias("n_occ")]
-    if exclude_first:
-        aggs.append(F.min(F.struct("doc_id", "pos")).alias("first"))
-    totals = (
-        wins.groupBy("h").agg(*aggs).filter(F.col("n_occ") >= min_count)
-    )
-    hit = wins.join(totals, "h")
-    if exclude_first:
-        hit = hit.filter(F.struct("doc_id", "pos") != F.col("first"))
-    return hit.select("doc_id", "pos")
 
 
 def winnow_hit_docs(
@@ -1363,7 +1322,7 @@ def winnow_hit_docs(
     # repeated-gram totals partial-combine map-side (hot grams collapse
     # per partition before the shuffle) and the tiny repeated set joins
     # back as an AQE broadcast — the selected-gram stream itself never
-    # repartitions (r13; same rationale as _repeated_positions)
+    # repartitions (r13; same rationale as dedupe_substrings' totals)
     rep = grams.groupBy("hv").agg(F.count(F.lit(1)).alias("c")).filter(
         F.col("c") >= 2
     )
@@ -1486,7 +1445,7 @@ def _resolve_substring_scan(
     prefilter,
 ) -> tuple[DataFrame, bool, float | None]:
     """The corpus slice feeding the stride-1 fingerprint stream, per
-    the ``prefilter`` mode of the two substring operators:
+    the ``prefilter`` mode of :func:`dedupe_substrings`:
 
     - ``False`` — every doc (the plain path);
     - ``True`` — docs flagged by :func:`winnow_hit_docs` (forced);
@@ -1572,9 +1531,7 @@ def _span_stats_agg(L: int):
     """Aggregate expression merging the sorted dup-window positions of
     one doc into maximal spans — (n_spans, covered, cur_end) struct.
     A window at pos covers [pos, pos+L-1]; a window starts a new span
-    iff pos > prev_end + 1. Single sorted fold, O(positions per doc).
-    Shared by :func:`repeated_substring_spans` and
-    :func:`dedupe_substrings`."""
+    iff pos > prev_end + 1. Single sorted fold, O(positions per doc)."""
     return F.aggregate(
         F.array_sort(F.collect_list("pos")),
         F.expr(
@@ -1605,8 +1562,7 @@ def _excise_expr(L: int):
     """Excision fold over columns ``ps`` (sorted cut positions) and
     ``text``: walk the sorted flagged positions; ``nk`` is the next
     keep-start (1-based). For each pos: emit the kept gap [nk, pos-1]
-    if non-empty, then advance nk past the cut window. Shared by
-    :func:`remove_repeated_substrings` and :func:`dedupe_substrings`."""
+    if non-empty, then advance nk past the cut window."""
     return F.expr(
         f"""aggregate(
             ps,
@@ -1624,6 +1580,72 @@ def _excise_expr(L: int):
     )
 
 
+def _substring_rows(
+    docs: DataFrame, hits: DataFrame, L: int, id_col: str, text_col: str
+) -> DataFrame:
+    """The per-doc step every substring operator and the streaming
+    substring tier share. ``hits`` holds ``(doc_id, pos, cut)``, one row
+    per repeated length-``L`` window; ``cut`` marks the windows to
+    excise. ONE groupBy yields the span stats (over every hit) and the
+    sorted cut positions, and the excision fold stitches the kept
+    segments back together. Returns one row per doc of ``docs``:
+    (doc_id, clean_text, n_dup_windows, n_spans, dup_chars, dup_frac,
+    removed_chars, n_removed_windows). A caller that selects only some
+    columns pays only for them: Catalyst prunes the unselected
+    aggregates (and the text column, when no clean_text is selected)."""
+    merged = hits.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_dup_windows"),
+        _span_stats_agg(L).alias("sp"),
+        F.array_sort(F.collect_list(F.when(F.col("cut"), F.col("pos")))).alias("ps"),
+        F.count_if(F.col("cut")).alias("n_removed_windows"),
+    )
+    return (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(text_col).alias("text"),
+            F.length(text_col).alias("doc_len"),
+        )
+        .join(merged, "doc_id", "left")
+        .select(
+            "doc_id",
+            "doc_len",
+            F.when(F.col("ps").isNull() | (F.size("ps") == 0), F.col("text"))
+            .otherwise(_excise_expr(L))
+            .alias("clean_text"),
+            *[
+                F.coalesce(c, F.lit(0)).cast("long").alias(name)
+                for c, name in (
+                    ("n_dup_windows", "n_dup_windows"),
+                    ("sp.n_spans", "n_spans"),
+                    ("sp.covered", "dup_chars"),
+                    ("n_removed_windows", "n_removed_windows"),
+                )
+            ],
+        )
+        .select(
+            "doc_id",
+            "clean_text",
+            "n_dup_windows",
+            "n_spans",
+            "dup_chars",
+            quantize(
+                F.when(
+                    F.col("doc_len") > 0, F.col("dup_chars") / F.col("doc_len")
+                ).otherwise(F.lit(0.0)),
+                6,
+            ).alias("dup_frac"),
+            (F.col("doc_len") - F.length("clean_text"))
+            .cast("long")
+            .alias("removed_chars"),
+            "n_removed_windows",
+        )
+    )
+
+
+#: output columns of the removal projection of :func:`dedupe_substrings`
+_REMOVAL_COLS = ("doc_id", "clean_text", "removed_chars", "n_removed_windows")
+
+
 def repeated_substring_spans(
     docs: DataFrame,
     window: int = 40,
@@ -1639,78 +1661,17 @@ def repeated_substring_spans(
     ``min_count``+ times anywhere in the corpus is exactly the union of
     its repeated length-``window`` sliding windows, so stride-1 window
     fingerprints + a global count give EXACT span coverage — no suffix
-    array, no approximation at the chosen granularity.
+    array, no approximation at the chosen granularity. Per-doc ranges
+    are merged into maximal spans by a single sorted fold.
 
-    Per doc: every start position emits a 128-bit window fingerprint
-    (two seeded xxhash64s — see _window_fingerprints); window
-    hashes with a global occurrence count >= ``min_count`` mark their
-    [i, i+window-1] character range as repeated; per-doc ranges are
-    merged into maximal spans by a single sorted fold (no second pass,
-    no window function). Returns one row per input doc:
-    (doc_id, n_dup_windows, n_spans, dup_chars, dup_frac).
-
-    Scale shape (r13): the O(corpus chars) fingerprint stream is
-    NEVER repartitioned — per-hash totals partial-aggregate map-side
-    straight off the expansion (a hot boilerplate fingerprint
-    collapses to one row per input partition before the only
-    corpus-sized shuffle, the totals aggregate exchange), and the
-    position probe joins the tiny repeated-hash table back by AQE
-    broadcast (skew-split sort-merge fallback if a pathological
-    corpus outgrows the broadcast threshold). The doc input is spread
-    by id (:func:`~snowalert_spark.tables.spread`) so the expansion
-    parallelizes even off a single-split scan, and the per-doc merge
-    reuses that id partitioning instead of exchanging again. That is
-    the same order of work as the published suffix-array build, and
-    the dominant cost by design. The fold-based interval merge is
-    O(positions per doc), not O(n^2).
-
-    ``prefilter=True`` inserts the winnowing phase
-    (:func:`winnow_hit_docs`): only docs provably able to hold a
-    repeated window feed the stride-1 stream, cutting the dominant
-    exchange to the duplicated corpus slice + ~2/(w+1) of the rest —
-    the 100 TB shape when duplication is sparse. Output is
-    bit-identical either way (non-hit docs hold only unique windows);
-    the zero rows for filtered docs come from the same final left
-    join every doc already passes through. The default ``'auto'``
-    measures phase 1's hit fraction and only restricts when at most
-    :data:`SUBSTR_PREFILTER_MAX_HIT_FRAC` of docs are flagged (the
-    sparse-duplication regime where the probe measured the win);
-    denser corpora fall through to the plain path.
-    """
-    L = int(window)
-    scan, _, _ = _resolve_substring_scan(docs, L, id_col, text_col, prefilter)
-    wins = _window_fingerprints(scan, L, id_col, text_col)
-    hits = _repeated_positions(wins, min_count)
-    # merge sorted positions into maximal spans: window at pos covers
-    # [pos, pos+L-1]; a window starts a new span iff pos > prev_end + 1
-    merged = hits.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_dup_windows"),
-        _span_stats_agg(L).alias("sp"),
-    ).select(
-        "doc_id",
-        "n_dup_windows",
-        F.col("sp.n_spans").alias("n_spans"),
-        F.col("sp.covered").alias("dup_chars"),
-    )
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.length(text_col).alias("doc_len")
-        )
-        .join(merged, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_dup_windows", F.lit(0)).cast("long").alias("n_dup_windows"),
-            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
-            F.coalesce("dup_chars", F.lit(0)).cast("long").alias("dup_chars"),
-            quantize(
-                F.when(
-                    F.col("doc_len") > 0,
-                    F.coalesce("dup_chars", F.lit(0)) / F.col("doc_len"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_frac"),
-        )
-    )
+    The spans report of :func:`dedupe_substrings` (same parameters, same
+    ``prefilter`` modes and scale shape): one row per input doc,
+    (doc_id, n_dup_windows, n_spans, dup_chars, dup_frac). Catalyst
+    prunes the removal half, so no first-occurrence aggregate and no
+    excision run."""
+    return dedupe_substrings(
+        docs, window, min_count, id_col, text_col, prefilter
+    ).select("doc_id", "n_dup_windows", "n_spans", "dup_chars", "dup_frac")
 
 
 def remove_repeated_substrings(
@@ -1731,54 +1692,13 @@ def remove_repeated_substrings(
     per-doc cut ranges are merged and excised in one sorted fold that
     stitches the kept segments back together.
 
-    Returns one row per input doc:
-    (doc_id, clean_text, removed_chars, n_removed_windows).
-
-    Scale shape (r13): the per-hash count and first-occurrence
-    (min (doc_id, pos), identical to the previous rank-1 rule) come
-    from a partial-combined aggregate straight off the fingerprint
-    stream — no stream repartition; hot fingerprints collapse
-    map-side and the position probe joins the repeated-hash table
-    back by AQE broadcast (see :func:`_repeated_positions` for the
-    skew story). The flagged subset joins back on doc_id
-    and the excision is a per-doc fold — no O(n^2) step. Identical
-    work profile to the detection operator, including the optional
-    winnowing ``prefilter`` (bit-identical output; kept-one windows
-    in non-hit docs are untouched because a non-hit doc holds no
-    repeated window at all) and the same ``'auto'`` default
-    (:func:`_resolve_substring_scan`'s hit-fraction rule).
-    """
-    L = int(window)
-    scan, _, _ = _resolve_substring_scan(docs, L, id_col, text_col, prefilter)
-    wins = _window_fingerprints(scan, L, id_col, text_col)
-    flagged = _repeated_positions(wins, min_count, exclude_first=True)
-    cuts = flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_removed_windows"),
-        F.array_sort(F.collect_list("pos")).alias("ps"),
-    )
-    clean = _excise_expr(L)
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .join(cuts, "doc_id", "left")
-        .select(
-            "doc_id",
-            "text",
-            F.when(F.col("ps").isNull(), F.col("text"))
-            .otherwise(clean)
-            .alias("clean_text"),
-            F.coalesce("n_removed_windows", F.lit(0))
-            .cast("long")
-            .alias("n_removed_windows"),
-        )
-        .select(
-            "doc_id",
-            "clean_text",
-            (F.length("text") - F.length("clean_text"))
-            .cast("long")
-            .alias("removed_chars"),
-            "n_removed_windows",
-        )
-    )
+    The removal projection of :func:`dedupe_substrings` (same
+    parameters, same ``prefilter`` modes and scale shape): one row per
+    input doc, (doc_id, clean_text, removed_chars, n_removed_windows).
+    Catalyst prunes the span-stats half."""
+    return dedupe_substrings(
+        docs, window, min_count, id_col, text_col, prefilter
+    ).select(*_REMOVAL_COLS)
 
 
 def substring_fingerprint_counts(
@@ -1920,35 +1840,10 @@ def cross_snapshot_substring_removal(
                 & (F.struct("doc_id", "pos") == F.col("first_new"))
             )
         )
-        .select("doc_id", "pos")
+        .select("doc_id", "pos", F.lit(True).alias("cut"))
     )
-    cuts = flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_removed_windows"),
-        F.array_sort(F.collect_list("pos")).alias("ps"),
-    )
-    return (
-        new_docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
-        .join(cuts, "doc_id", "left")
-        .select(
-            "doc_id",
-            "text",
-            F.when(F.col("ps").isNull(), F.col("text"))
-            .otherwise(_excise_expr(L))
-            .alias("clean_text"),
-            F.coalesce("n_removed_windows", F.lit(0))
-            .cast("long")
-            .alias("n_removed_windows"),
-        )
-        .select(
-            "doc_id",
-            "clean_text",
-            (F.length("text") - F.length("clean_text"))
-            .cast("long")
-            .alias("removed_chars"),
-            "n_removed_windows",
-        )
+    return _substring_rows(new_docs, flagged, L, id_col, text_col).select(
+        *_REMOVAL_COLS
     )
 
 
@@ -1960,28 +1855,36 @@ def dedupe_substrings(
     text_col: str = "text",
     prefilter: bool | str = "auto",
 ) -> DataFrame:
-    """Combined Lee et al. (arXiv:2107.06499) substring dedup: the
-    spans REPORT of :func:`repeated_substring_spans` and the cleaned
-    text of :func:`remove_repeated_substrings` in one output row per
-    doc, computed from ONE window-fingerprint stream. A curation
-    pipeline almost always wants both (the report drives the
-    drop-vs-clean decision, the clean text is what ships); running the
-    two single-purpose operators back-to-back pays the corpus-chars
-    fingerprint expansion, the per-hash totals aggregate, and the
-    docs join TWICE. This operator shares all of them: one scan
-    decision (:func:`_resolve_substring_scan`'s auto prefilter probe
-    runs once), one fingerprint stream whose totals aggregate
-    computes the occurrence count AND the globally-first occurrence
-    together (map-side combined, never a stream repartition — see
-    :func:`_repeated_positions`), and ONE per-doc groupBy producing
-    both the span stats and the sorted cut positions. At 100 TB that
-    halves the dominant shuffle of the substring family.
+    """Lee et al. (arXiv:2107.06499) substring dedup: the spans report
+    and the keep-one cleaned text in one output row per doc. This is
+    the one substring operator: :func:`repeated_substring_spans` and
+    :func:`remove_repeated_substrings` are projections of it, and
+    Catalyst prunes whatever a projection does not select.
 
-    Returns one row per input doc with the union of both operators'
-    columns, bit-identical to running them separately (pinned by
-    tests/test_substring_combined.py): (doc_id, clean_text,
-    n_dup_windows, n_spans, dup_chars, dup_frac, removed_chars,
-    n_removed_windows).
+    One scan decision (:func:`_resolve_substring_scan`'s ``prefilter``
+    mode: ``False``, ``True`` or the default ``'auto'``; output is
+    bit-identical in every mode), one stride-1 fingerprint stream
+    (:func:`_window_fingerprints`), one per-hash totals aggregate that
+    computes the occurrence count AND the globally-first occurrence
+    (min (doc_id, pos)), and one per-doc step (:func:`_substring_rows`):
+    every window of a hash counted ``min_count``+ times is a hit, and
+    every hit but the first occurrence is cut.
+
+    Scale shape (r13): the O(corpus chars) fingerprint stream is never
+    repartitioned (the r10-r12 static (h, salt) repartition moved it
+    twice for nothing). The totals aggregate partial-combines map-side,
+    so a hot boilerplate fingerprint collapses to one row per input
+    partition before the only corpus-sized shuffle; the position probe
+    joins the repeated-hash table back by AQE broadcast, with a
+    skew-split sort-merge fallback if a pathological corpus outgrows
+    the broadcast threshold. The doc input is spread by id, so the
+    expansion parallelizes off a single-split scan and the per-doc
+    merge reuses that partitioning.
+
+    Returns (doc_id, clean_text, n_dup_windows, n_spans, dup_chars,
+    dup_frac, removed_chars, n_removed_windows); tests/
+    test_substring_combined.py pins it against a pure-Python brute
+    force.
     """
     L = int(window)
     scan, _, _ = _resolve_substring_scan(docs, L, id_col, text_col, prefilter)
@@ -1994,61 +1897,9 @@ def dedupe_substrings(
         )
         .filter(F.col("n_occ") >= min_count)
     )
-    hit = wins.join(totals, "h").select(
+    hits = wins.join(totals, "h").select(
         "doc_id",
         "pos",
-        (F.struct("doc_id", "pos") == F.col("first")).alias("is_first"),
+        (F.struct("doc_id", "pos") != F.col("first")).alias("cut"),
     )
-    # one per-doc aggregate feeds BOTH folds: every hit position for
-    # the span merge, the non-first subset (collect_list skips the
-    # NULLs the `when` leaves) for the excision
-    merged = hit.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_dup_windows"),
-        _span_stats_agg(L).alias("sp"),
-        F.array_sort(
-            F.collect_list(F.when(~F.col("is_first"), F.col("pos")))
-        ).alias("ps"),
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .join(merged, "doc_id", "left")
-        .select(
-            "doc_id",
-            "text",
-            F.when(
-                F.col("ps").isNull() | (F.size("ps") == 0), F.col("text")
-            )
-            .otherwise(_excise_expr(L))
-            .alias("clean_text"),
-            F.coalesce("n_dup_windows", F.lit(0))
-            .cast("long")
-            .alias("n_dup_windows"),
-            F.coalesce(F.col("sp.n_spans"), F.lit(0))
-            .cast("long")
-            .alias("n_spans"),
-            F.coalesce(F.col("sp.covered"), F.lit(0))
-            .cast("long")
-            .alias("dup_chars"),
-            F.coalesce(F.size("ps"), F.lit(0))
-            .cast("long")
-            .alias("n_removed_windows"),
-        )
-        .select(
-            "doc_id",
-            "clean_text",
-            "n_dup_windows",
-            "n_spans",
-            "dup_chars",
-            quantize(
-                F.when(
-                    F.length("text") > 0,
-                    F.col("dup_chars") / F.length("text"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_frac"),
-            (F.length("text") - F.length("clean_text"))
-            .cast("long")
-            .alias("removed_chars"),
-            "n_removed_windows",
-        )
-    )
+    return _substring_rows(docs, hits, L, id_col, text_col)

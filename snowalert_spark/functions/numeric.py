@@ -24,12 +24,6 @@ def dsum(col: Column | str) -> Column:
     return F.sum(c.cast(DEC)).cast("double")
 
 
-def davg(col: Column | str) -> Column:
-    """Order-independent AVG via exact decimal sum / count."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double") / F.count(c)
-
-
 def quantize(col: Column, digits: int = 4) -> Column:
     """Cross-engine deterministic rounding of a double.
 

@@ -51,13 +51,6 @@ def shingles(tok: Column, k: int = 3) -> Column:
     return bind_array(tok, mk)
 
 
-def minhash_value(seed: Column | int, shingle: Column) -> Column:
-    """Portable MinHash hash: md5 over ``seed:shingle``; the per-doc
-    signature element is MIN() of this (lexicographic on hex)."""
-    s = F.lit(seed) if isinstance(seed, int) else seed
-    return F.md5(F.concat_ws(":", s.cast("string"), shingle))
-
-
 # MinHash affine permutation family over a single 32-bit base hash:
 # h_i(x) = (A_i·x + B_i) mod P — one md5 per shingle instead of one per
 # (shingle, seed); A_i < 2^31 and x < 2^32 keep A_i·x within signed

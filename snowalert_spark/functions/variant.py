@@ -45,16 +45,6 @@ def _named_struct_sorted(kv: dict[str, Column]) -> Column:
     return F.struct(*cols)
 
 
-def violation_identity(result: dict[str, Column], identity: Column | None = None) -> Column:
-    """Content-addressed violation id: md5 of the canonical JSON of
-    IDENTITY if present else of the canonical 9-key object
-    (db.py:465-492)."""
-    canon = F.to_json(_named_struct_sorted(result))
-    if identity is not None:
-        return F.md5(F.coalesce(identity, canon))
-    return F.md5(canon)
-
-
 def recursive_flatten(df, json_col: str, id_cols: list[str]):
     """LATERAL FLATTEN(input => v, recursive => true) analog
     (cis_azure_pack.sql:192-217 uses it to search all paths of a

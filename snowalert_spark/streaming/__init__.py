@@ -384,9 +384,11 @@ def neardup_stream_ingest(
 
     1. exact-text dups inside the batch keep the smallest ``id_col``
        (one window over ``md5(text)``);
-    2. the batch is shingled and band-bucketed ONCE; both frames are
-       cached and feed every step below — the accumulated corpus is
-       NEVER re-shingled or all-paired;
+    2. the batch is shingled and band-bucketed ONCE, by the MinHash
+       bucket builder the batch operators use
+       (``dedup._shingle_buckets``); both frames are cached and feed
+       every step below — the accumulated corpus is NEVER re-shingled
+       or all-paired;
     3. one candidate join (:func:`_candidate_pairs`, shared with the
        embedding and media tiers) on (band, band_hash) against the
        batch's smaller ids and the persisted state buckets;
@@ -433,27 +435,11 @@ def neardup_stream_ingest(
     (aws_cloudtrail.py:253-275: each tick processes only new files
     against results-table state).
     """
-    from snowalert_spark.functions.dedup import (
-        _signature_aggs,
-        base_hash32,
-        doc_shingles,
-        minhash_band_buckets,
-    )
+    from snowalert_spark.functions.dedup import _shingle_buckets, doc_shingles
     from snowalert_spark.functions.numeric import quantize
 
     sh_dir = os.path.join(state_dir, "base_shingles")
     bk_dir = os.path.join(state_dir, "base_buckets")
-    sig_aggs = _signature_aggs(n_hashes)  # built once per stream
-
-    def _buckets(sh):
-        sigs = (
-            sh.select(F.col(id_col).alias("doc_id"), base_hash32(F.col("s")).alias("h"))
-            .groupBy("doc_id")
-            .agg(*sig_aggs)
-        )
-        return minhash_band_buckets(sigs, n_hashes, rows_per_band).withColumnRenamed(
-            "doc_id", id_col
-        )
 
     def process(batch: DataFrame, batch_id: int, cached: list) -> None:
         # -- 1. in-batch exact dups keep the smallest id (cached: it
@@ -470,7 +456,7 @@ def neardup_stream_ingest(
             keep.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
             k,
         ).withColumnRenamed("doc_id", id_col).cache()
-        bk = _buckets(sh).cache()
+        bk = _shingle_buckets(sh, n_hashes, rows_per_band, id_col).cache()
         cached += [sh, bk]
 
         # -- 3. one candidate join: the batch's smaller ids and the
@@ -698,7 +684,12 @@ def neardup_media_stream_ingest(
             f"hamming {threshold}: need blocks - combo >= threshold"
         )
     if fingerprint is None:
-        fingerprint = lambda b: MM.image_dhash(b, decode="fake")  # noqa: E731
+        def fingerprint(b: DataFrame) -> DataFrame:
+            # image_dhash reads and emits a fixed media_id column
+            return MM.image_dhash(
+                b.select(F.col(id_col).alias("media_id"), "meta", "data"),
+                decode="fake",
+            ).withColumnRenamed("media_id", id_col)
 
     hash_dir = os.path.join(state_dir, "base_hashes")
     key_dir = os.path.join(state_dir, "base_keys")
@@ -1020,9 +1011,11 @@ def substring_stream_ingest(
        the bucketed state table — the state side never exchanges) OR
        it repeats within the batch and is not the batch-first
        occurrence (and the hash is absent from state);
-    3. per-doc flagged positions run the batch operator's sorted
-       excision fold; every doc publishes (clean_text, removed_chars,
-       n_removed_windows) to a ``batch_id={b}`` output partition;
+    3. the flagged windows, every one marked cut, run the batch
+       operators' per-doc step (``dedup._substring_rows``: one groupBy,
+       then the sorted excision fold); every doc publishes (clean_text,
+       removed_chars, n_removed_windows) to a ``batch_id={b}`` output
+       partition;
     4. the batch's DISTINCT fingerprints append to state (distinct —
        the kept-first occurrence's content survives in the output, so
        one state row per hash serves every future match).
@@ -1069,7 +1062,8 @@ def substring_stream_ingest(
     stays bounded on unbounded streams.
     """
     from snowalert_spark.functions.dedup import (
-        _excise_expr,
+        _REMOVAL_COLS,
+        _substring_rows,
         _window_fingerprints,
     )
 
@@ -1155,35 +1149,10 @@ def substring_stream_ingest(
                     & (F.struct("doc_id", "pos") != F.col("first"))
                 )
             )
-            .select("doc_id", "pos")
+            .select("doc_id", "pos", F.lit(True).alias("cut"))
         )
-        cuts = flagged.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_removed_windows"),
-            F.array_sort(F.collect_list("pos")).alias("ps"),
-        )
-        out = (
-            batch.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            )
-            .join(cuts, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("ps").isNull(), F.col("text"))
-                .otherwise(_excise_expr(L))
-                .alias("clean_text"),
-                "text",
-                F.coalesce("n_removed_windows", F.lit(0))
-                .cast("long")
-                .alias("n_removed_windows"),
-            )
-            .select(
-                "doc_id",
-                "clean_text",
-                (F.length("text") - F.length("clean_text"))
-                .cast("long")
-                .alias("removed_chars"),
-                "n_removed_windows",
-            )
+        out = _substring_rows(batch, flagged, L, id_col, text_col).select(
+            *_REMOVAL_COLS
         )
         out.write.mode("overwrite").parquet(_batch_dir(dst_path, batch_id))
         # state append: one row per batch hash NOT already in state

@@ -206,3 +206,26 @@ def test_driver_path_on_raw_edges_matches_distributed(spark):
     via_driver = _cc(spark, pairs)  # default bound -> driver path
     via_dist = _cc(spark, pairs, driver_max_edges=0)  # forced distributed
     assert via_driver == via_dist == {2: 2, 5: 2, 9: 2, 30: 30, 31: 30}
+
+
+@pytest.mark.parametrize("entry", ["star", "escalated"])
+def test_range_derived_graph_labels(spark, entry):
+    """A graph built from a filtered ``spark.range`` carries filter
+    constraints into the symmetrize step; a self-union with the columns
+    swapped made Catalyst's Union constraint rewrite raise
+    ``NoSuchElementException: key not found: b``. Both the star entry
+    and min-label's escalation into it must label such a graph."""
+    g = (
+        spark.range(8)
+        .filter(F.col("id") % 4 != 0)
+        .select(
+            (F.col("id") - F.col("id") % 4).alias("doc_a"),
+            F.col("id").alias("doc_b"),
+        )
+    )
+    if entry == "star":
+        out = D.connected_components_star(g)
+    else:
+        out = D.connected_components(g, max_iter=1, driver_max_edges=0)
+    got = {r["node"]: r["cluster_id"] for r in out.collect()}
+    assert got == {n: n - n % 4 for n in range(8)}

@@ -249,3 +249,47 @@ def test_micro_batch_job_budget(spark, tmp_path, last_job_id):
     jobs = last_job_id() - before
     assert _out_ids(spark, tmp) == [1, 2, 4]
     assert jobs <= 28, f"second micro-batch ran {jobs} Spark jobs"
+
+
+def test_default_fingerprint_keyed_by_any_id_col(spark, tmp_path):
+    """The default fingerprint (the image dHash) reads and emits a fixed
+    ``media_id`` column; a stream keyed by another id column still
+    dedups through it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = str(tmp_path)
+    os.makedirs(f"{tmp}/src")
+    rows = [(7, NEAR), (3, BASE), (9, OTHER)]
+    pq.write_table(
+        pa.table(
+            {
+                "asset_id": pa.array([i for i, _ in rows], pa.int64()),
+                "data": pa.array([t.encode() for _, t in rows], pa.binary()),
+                "meta": pa.array(
+                    [None] * len(rows), pa.struct([("format", pa.string())])
+                ),
+            }
+        ),
+        f"{tmp}/src/f1.parquet",
+    )
+    schema = T.StructType(
+        [
+            T.StructField("asset_id", T.LongType()),
+            T.StructField("data", T.BinaryType()),
+            T.StructField("meta", T.StructType([T.StructField("format", T.StringType())])),
+        ]
+    )
+    neardup_media_stream_ingest(
+        spark,
+        src_path=f"{tmp}/src",
+        dst_path=f"{tmp}/out",
+        checkpoint=f"{tmp}/ckpt",
+        state_dir=f"{tmp}/state",
+        schema=schema,
+        fmt="parquet",
+        threshold=3,
+        id_col="asset_id",
+    )
+    out = spark.read.parquet(f"{tmp}/out").collect()
+    assert sorted(r["asset_id"] for r in out) == [3, 9]
