@@ -1068,8 +1068,9 @@ def connected_components(
             # alternating-star contraction instead of failing. The
             # min-label rounds already spent are sunk cost, but a
             # diameter this large means the star path is the only one
-            # that terminates at all.
-            return connected_components_star(edges, src, dst)
+            # that terminates at all. It starts from the checkpointed
+            # pairs, so the caller's upstream plan is not run again.
+            return connected_components_star(e, "a", "b")
         raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
     return labels.select("node", F.col("label").alias("cluster_id"))
 
@@ -1180,11 +1181,6 @@ def connected_components_star(
 # (_substring_rows) serve the spans and removal projections, the
 # cross-snapshot operator and the streaming substring tier.
 
-#: winnowing window (grams per selection window) for the stride
-#: prefilter: selected density ~2/(w+1), i.e. ~8x less fingerprint
-#: shuffle in phase 1
-WINNOW_W = 16
-
 
 def _window_fingerprints(
     docs: DataFrame, L: int, id_col: str, text_col: str
@@ -1192,7 +1188,8 @@ def _window_fingerprints(
     """``(doc_id, pos, h)`` — a 128-bit fingerprint of every stride-1
     length-``L`` window of every doc (docs shorter than L emit
     nothing). The O(corpus chars) stream every substring operator is
-    built on.
+    built on; :func:`dedupe_substrings` and the cross-snapshot
+    operator feed it their whole doc input.
 
     The fingerprint is a struct of two xxhash64 passes under distinct
     effective seeds (h = struct<a:bigint, b:bigint>, 16 bytes):
@@ -1241,290 +1238,6 @@ def _window_fingerprints(
             )
         ).alias("w"),
     ).select("doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h"))
-
-
-def winnow_hit_docs(
-    docs: DataFrame,
-    window: int = 40,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Phase-1 stride prefilter: the (distinct) ids of every doc that
-    can possibly contain a repeated length-``window`` substring —
-    winnowing-sampled fingerprints (Schleimer et al., "Winnowing:
-    Local Algorithms for Document Fingerprinting", SIGMOD'03).
-
-    Per doc, grams of length g = window - w + 1 are hashed and from
-    every run of ``w`` consecutive gram positions the RIGHTMOST
-    minimum hash is selected — a content-defined choice, so two
-    occurrences of the same substring select the same gram contents.
-    Winnowing's guarantee threshold is g + w - 1 = window exactly:
-    every repeated length-``window`` window shares at least one
-    selected gram between its occurrences (a position-strided sample
-    could NOT promise this — the occurrences' stride offsets differ,
-    so their on-stride windows have different contents). Therefore a
-    selected-gram value with global count >= 2 flags both docs, and
-    the hit-doc set provably contains every doc any repeated window
-    touches — phase 2 (the exact stride-1 machinery) restricted to
-    hit docs computes bit-identical global counts, because non-hit
-    docs hold only unique windows (equality pinned by
-    tests/test_substring_prefilter.py).
-
-    Selection is entirely map-side (one pass per doc, O(chars * w)
-    cheap long comparisons after one md5 per gram); only the selected
-    ~2/(w+1) fraction of fingerprints reaches the exchange — the
-    judge-flagged "~70x corpus bytes of shuffle" constant drops ~8x
-    at w=16. The phase-1 count threshold is fixed at 2 (conservative
-    for any min_count: winnowing guarantees a shared selected gram
-    per occurrence PAIR; exact thresholds re-apply in phase 2)."""
-    g = window - w + 1
-    if g < 4:
-        raise ValueError(
-            f"winnow window {w} too wide for substring window {window}: "
-            f"gram length {g} < 4 (hash quality floor)"
-        )
-    # gram hashes as longs (15 hex chars < 2^60); docs shorter than
-    # `window` have < w grams (no selection window fits) and can't
-    # contain a repeated window anyway — they emit nothing, exactly
-    # like the main path's guard
-    # gram hash: xxhash64 directly (r12 — the md5-hex + base-16 conv
-    # this replaces was the dominant phase-1 compute; winnowing's
-    # guarantee is hash-agnostic, and the final operator output is
-    # bit-identical under ANY gram hash because the hit-doc set is
-    # always a superset of the true dup docs)
-    hl = (
-        f"transform(sequence(1, length({text_col}) - {g} + 1), "
-        f"i -> xxhash64(substring({text_col}, i, {g})))"
-    )
-    # size guard: sequence(1, n) DESCENDS for n < 1, so an empty gram
-    # array (doc shorter than `window`) must short-circuit to array()
-    sel = (
-        f"CASE WHEN size(hl) >= {w} THEN "
-        f"array_distinct(transform(sequence(1, size(hl) - {w} + 1), "
-        f"j -> aggregate(sequence(0, {w} - 1), "
-        f"struct(CAST(0 AS INT) AS p, CAST(9223372036854775807 AS BIGINT) AS m), "
-        f"(acc, k) -> IF(hl[j + k - 1] <= acc.m, "
-        f"struct(CAST(j + k AS INT) AS p, hl[j + k - 1] AS m), acc)).p)) "
-        f"ELSE CAST(array() AS array<int>) END"
-    )
-    grams = (
-        spread(docs, id_col)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.when(F.length(text_col) >= window, F.expr(hl))
-            .otherwise(F.expr("CAST(array() AS array<bigint>)"))
-            .alias("hl"),
-        )
-        .select("doc_id", "hl", F.explode(F.expr(sel)).alias("p"))
-        .select("doc_id", "p", F.expr("hl[p - 1]").alias("hv"))
-    )
-    # repeated-gram totals partial-combine map-side (hot grams collapse
-    # per partition before the shuffle) and the tiny repeated set joins
-    # back as an AQE broadcast — the selected-gram stream itself never
-    # repartitions (r13; same rationale as dedupe_substrings' totals)
-    rep = grams.groupBy("hv").agg(F.count(F.lit(1)).alias("c")).filter(
-        F.col("c") >= 2
-    )
-    return grams.join(rep, "hv").select("doc_id").distinct()
-
-
-#: auto-mode ceiling on the SAMPLED phase-1 hit fraction: a sample
-#: already this dense proves the corpus dense (sampling never
-#: overestimates) and phase 1 is skipped entirely — its exchange
-#: saving couldn't repay its scan (the dense-duplication probe at
-#: hit_frac 0.54 LOST wall both SFs — BENCH_r11_substring_prefilter
-#: loss analysis put the crossover in the 0.1-0.2 band; 0.2 is its
-#: conservative edge)
-SUBSTR_PREFILTER_MAX_HIT_FRAC = 0.2
-
-#: once the FULL phase 1 has already run, its cost is sunk and
-#: restricting phase 2 to hit docs is bit-identical and strictly
-#: cheaper than the plain path — each skipped doc is skipped in BOTH
-#: materializations of the fingerprint stream. The only regime where
-#: restriction loses is hit_frac ~ 1, where it saves nothing and adds
-#: a semi-join; above this ceiling the plain path runs instead. (The
-#: r12 session measured the old always-fall-through rule paying full
-#: phase 1 AND full phase 2 on the dense driver corpus — the worst of
-#: the three strategies.)
-SUBSTR_RESTRICT_MAX_HIT_FRAC = 0.9
-
-#: auto-mode sample probe size: before paying the full phase-1 scan,
-#: winnow a ~this-many-doc sample — a sample's hit fraction can only
-#: UNDERestimate the corpus one (a doc's duplicate partner may be
-#: outside the sample, never the reverse), so a sample verdict of
-#: "dense" is certain and skips phase 1 entirely; a "sparse" verdict
-#: falls through to the exact full-corpus decision. Keeps the dense
-#: fall-through overhead at ~probe/corpus of a phase-1 scan instead
-#: of a whole one (the r12 two-pass bench measured full phase 1 at
-#: ~2.3x row wall on the dense driver corpus).
-SUBSTR_PREFILTER_PROBE_DOCS = 512
-
-#: Bounded pool of the hit-id tables persisted by
-#: :func:`_resolve_substring_scan`. The persist is needed because the
-#: returned plan materializes the winnow scan twice (the fingerprint
-#: stream feeds two consumers — totals and probe — and Catalyst only
-#: dedups exchanges, not arbitrary subtrees) and the consuming action is the
-#: CALLER's (the operators return lazy DataFrames), so the operator
-#: cannot unpersist before returning. Without a bound, every
-#: substring-operator call in a long-lived session would accumulate a
-#: cached table (MEMORY_AND_DISK blocks spilled to disk are reclaimed
-#: only by unpersist or session end, not LRU — r12 advice). The pool
-#: keeps the most recent :data:`SUBSTR_HIT_CACHE_SLOTS` handles and
-#: unpersists the oldest beyond that; unpersisting is always safe
-#: (a still-live plan just recomputes). Call
-#: :func:`release_substring_caches` to drain it eagerly.
-#:
-#: Entries are ``(analyzed_plan, df)`` and insertion dedups by
-#: ``LogicalPlan.sameResult``: Spark's CacheManager keys cache entries
-#: by CANONICALIZED plan, so two calls over the same corpus share ONE
-#: underlying cache entry — naively appending a second handle and
-#: later evicting the first would unpersist that shared entry out
-#: from under the newer query, forcing every consumer back onto the
-#: raw winnow scan (measured: 5 s -> 16 s per call the moment the
-#: pool first overflowed). A same-plan call instead reuses the live
-#: handle and refreshes its slot. The usual ``.persist()`` staleness
-#: contract applies: if the underlying files change, drain the pool.
-SUBSTR_HIT_CACHE_SLOTS = 2
-_HIT_ID_CACHE_POOL: list = []
-
-
-def _pool_lookup(df: DataFrame) -> DataFrame | None:
-    """Return the pooled handle whose plan ``sameResult``s ``df``'s
-    (refreshing its LRU slot), or None. Lets the auto path skip the
-    sampled density probe when the full hit-id table for this
-    (corpus, window) is already live — the probe exists only to avoid
-    paying the full phase-1 scan, which a pool hit has already paid."""
-    plan = df._jdf.queryExecution().analyzed()
-    for i, (p, cached) in enumerate(_HIT_ID_CACHE_POOL):
-        if p.sameResult(plan):
-            _HIT_ID_CACHE_POOL.append(_HIT_ID_CACHE_POOL.pop(i))
-            return cached
-    return None
-
-
-def _pool_persist(df: DataFrame) -> DataFrame:
-    cached = _pool_lookup(df)
-    if cached is not None:
-        return cached
-    plan = df._jdf.queryExecution().analyzed()
-    df = df.persist()
-    _HIT_ID_CACHE_POOL.append((plan, df))
-    while len(_HIT_ID_CACHE_POOL) > SUBSTR_HIT_CACHE_SLOTS:
-        _HIT_ID_CACHE_POOL.pop(0)[1].unpersist()
-    return df
-
-
-def _pool_discard(df: DataFrame) -> None:
-    """Drop ``df``'s pool slot (identity match) and unpersist it —
-    the dense fall-through path decided not to use the table."""
-    for i, (_, cached) in enumerate(_HIT_ID_CACHE_POOL):
-        if cached is df:
-            _HIT_ID_CACHE_POOL.pop(i)
-            break
-    df.unpersist()
-
-
-def release_substring_caches() -> int:
-    """Unpersist every hit-id table still cached by the substring
-    operators' winnowing prefilter and return how many were released.
-    Safe at any time: a result DataFrame that is materialized after
-    its hit-id cache is released recomputes the winnow scan instead
-    of reading the cache (bit-identical output, slower)."""
-    n = len(_HIT_ID_CACHE_POOL)
-    while _HIT_ID_CACHE_POOL:
-        _HIT_ID_CACHE_POOL.pop()[1].unpersist()
-    return n
-
-
-def _resolve_substring_scan(
-    docs: DataFrame,
-    L: int,
-    id_col: str,
-    text_col: str,
-    prefilter,
-) -> tuple[DataFrame, bool, float | None]:
-    """The corpus slice feeding the stride-1 fingerprint stream, per
-    the ``prefilter`` mode of :func:`dedupe_substrings`:
-
-    - ``False`` — every doc (the plain path);
-    - ``True`` — docs flagged by :func:`winnow_hit_docs` (forced);
-    - ``'auto'`` (the default) — a two-stage decision. First a
-      ~:data:`SUBSTR_PREFILTER_PROBE_DOCS`-doc sampled winnow: its
-      hit fraction can only underestimate the corpus one, so a sample
-      already over :data:`SUBSTR_PREFILTER_MAX_HIT_FRAC` proves the
-      corpus dense and the plain path runs with only the tiny probe
-      as overhead. Otherwise the full phase 1 runs — and because its
-      cost is then SUNK, phase 2 restricts to hit docs whenever that
-      saves anything at all (exact hit_frac at most
-      :data:`SUBSTR_RESTRICT_MAX_HIT_FRAC`): each skipped doc is
-      skipped in BOTH materializations of the fingerprint stream, so
-      restriction strictly beats falling through to the plain path
-      (the r12 fix — the old rule paid full phase 1 AND full phase 2
-      on sample-underestimated dense corpora). All counts are bounded
-      driver scalars, and the decision can't affect output — every
-      branch is bit-identical by the winnowing guarantee (the hit-doc
-      set is a superset of all true dup docs).
-
-    The hit-id table (doc ids only — orders of magnitude smaller than
-    the corpus) is persisted at MEMORY_AND_DISK before use, because
-    the downstream fingerprint stream materializes its input subtree
-    twice (totals + position probe — Catalyst dedups exchanges, not
-    arbitrary subtrees): without
-    the persist the whole winnow scan would run once per consumer —
-    measured at 2x phase-1 wall in BENCH_r11_substring_prefilter's
-    removal rows. The handle lives in the bounded
-    :data:`_HIT_ID_CACHE_POOL` (r12 advice: LRU does not reclaim
-    disk-spilled MEMORY_AND_DISK blocks, so unbounded persists leak
-    across a long session); callers needing eager cleanup use
-    :func:`release_substring_caches`.
-
-    Returns ``(scan, used, hit_frac)`` — ``hit_frac`` is None unless
-    auto mode measured one (sampled or exact — the test pin for the
-    decision rule)."""
-    if prefilter is False or prefilter is None:
-        return docs, False, None
-    if prefilter == "auto":
-        n = docs.count()
-        if n == 0:
-            return docs, False, 0.0
-        full_plan = winnow_hit_docs(
-            docs, L, id_col=id_col, text_col=text_col
-        ).withColumnRenamed("doc_id", id_col)
-        # pool-first: a live hit-id table for this (corpus, window)
-        # means the full phase-1 scan is already paid — the sampled
-        # density probe exists only to avoid paying it, so skip the
-        # probe's three jobs and decide from the exact fraction
-        hit_ids = _pool_lookup(full_plan)
-        if hit_ids is None:
-            if n > SUBSTR_PREFILTER_PROBE_DOCS:
-                sample = docs.sample(
-                    fraction=min(1.0, SUBSTR_PREFILTER_PROBE_DOCS / n),
-                    seed=20107,
-                )
-                s_n = sample.count()
-                if s_n > 0:
-                    s_frac = (
-                        winnow_hit_docs(
-                            sample, L, id_col=id_col, text_col=text_col
-                        ).count()
-                        / s_n
-                    )
-                    if s_frac > SUBSTR_PREFILTER_MAX_HIT_FRAC:
-                        # certainly dense (sampling never overestimates)
-                        return docs, False, s_frac
-            hit_ids = _pool_persist(full_plan)
-        frac = hit_ids.count() / n
-        if frac > SUBSTR_RESTRICT_MAX_HIT_FRAC:
-            # restriction would skip almost nothing; don't add the join
-            _pool_discard(hit_ids)
-            return docs, False, frac
-        return docs.join(hit_ids, id_col, "left_semi"), True, frac
-    hit_ids = _pool_persist(
-        winnow_hit_docs(docs, L, id_col=id_col, text_col=text_col)
-        .withColumnRenamed("doc_id", id_col)
-    )
-    return docs.join(hit_ids, id_col, "left_semi"), True, None
 
 
 def _span_stats_agg(L: int):
@@ -1652,7 +1365,6 @@ def repeated_substring_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prefilter: bool | str = "auto",
 ) -> DataFrame:
     """Exact repeated-substring detection (the substring-level dedup of
     Lee et al., "Deduplicating Training Data Makes Language Models
@@ -1664,14 +1376,13 @@ def repeated_substring_spans(
     array, no approximation at the chosen granularity. Per-doc ranges
     are merged into maximal spans by a single sorted fold.
 
-    The spans report of :func:`dedupe_substrings` (same parameters, same
-    ``prefilter`` modes and scale shape): one row per input doc,
-    (doc_id, n_dup_windows, n_spans, dup_chars, dup_frac). Catalyst
-    prunes the removal half, so no first-occurrence aggregate and no
-    excision run."""
-    return dedupe_substrings(
-        docs, window, min_count, id_col, text_col, prefilter
-    ).select("doc_id", "n_dup_windows", "n_spans", "dup_chars", "dup_frac")
+    The spans report of :func:`dedupe_substrings` (same parameters and
+    scale shape): one row per input doc, (doc_id, n_dup_windows,
+    n_spans, dup_chars, dup_frac). Catalyst prunes the removal half, so
+    no first-occurrence aggregate and no excision run."""
+    return dedupe_substrings(docs, window, min_count, id_col, text_col).select(
+        "doc_id", "n_dup_windows", "n_spans", "dup_chars", "dup_frac"
+    )
 
 
 def remove_repeated_substrings(
@@ -1680,7 +1391,6 @@ def remove_repeated_substrings(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prefilter: bool | str = "auto",
 ) -> DataFrame:
     """The cleaning counterpart of :func:`repeated_substring_spans` —
     Lee et al. (arXiv:2107.06499) REMOVE every duplicated substring,
@@ -1693,12 +1403,12 @@ def remove_repeated_substrings(
     stitches the kept segments back together.
 
     The removal projection of :func:`dedupe_substrings` (same
-    parameters, same ``prefilter`` modes and scale shape): one row per
-    input doc, (doc_id, clean_text, removed_chars, n_removed_windows).
-    Catalyst prunes the span-stats half."""
-    return dedupe_substrings(
-        docs, window, min_count, id_col, text_col, prefilter
-    ).select(*_REMOVAL_COLS)
+    parameters and scale shape): one row per input doc, (doc_id,
+    clean_text, removed_chars, n_removed_windows). Catalyst prunes the
+    span-stats half."""
+    return dedupe_substrings(docs, window, min_count, id_col, text_col).select(
+        *_REMOVAL_COLS
+    )
 
 
 def substring_fingerprint_counts(
@@ -1853,7 +1563,6 @@ def dedupe_substrings(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prefilter: bool | str = "auto",
 ) -> DataFrame:
     """Lee et al. (arXiv:2107.06499) substring dedup: the spans report
     and the keep-one cleaned text in one output row per doc. This is
@@ -1861,14 +1570,16 @@ def dedupe_substrings(
     :func:`remove_repeated_substrings` are projections of it, and
     Catalyst prunes whatever a projection does not select.
 
-    One scan decision (:func:`_resolve_substring_scan`'s ``prefilter``
-    mode: ``False``, ``True`` or the default ``'auto'``; output is
-    bit-identical in every mode), one stride-1 fingerprint stream
-    (:func:`_window_fingerprints`), one per-hash totals aggregate that
-    computes the occurrence count AND the globally-first occurrence
-    (min (doc_id, pos)), and one per-doc step (:func:`_substring_rows`):
-    every window of a hash counted ``min_count``+ times is a hit, and
-    every hit but the first occurrence is cut.
+    One scan: the docs feed the stride-1 fingerprint stream
+    (:func:`_window_fingerprints`) directly, one per-hash totals
+    aggregate computes the occurrence count AND the globally-first
+    occurrence (min (doc_id, pos)), and one per-doc step
+    (:func:`_substring_rows`) follows: every window of a hash counted
+    ``min_count``+ times is a hit, and every hit but the first
+    occurrence is cut. No pass runs before the scan to guess which
+    docs can hold a repeat; on the engine's corpora a sixth to a half
+    of the docs do, and such a pass cost more jobs and wall than it
+    skipped.
 
     Scale shape (r13): the O(corpus chars) fingerprint stream is never
     repartitioned (the r10-r12 static (h, salt) repartition moved it
@@ -1887,8 +1598,7 @@ def dedupe_substrings(
     force.
     """
     L = int(window)
-    scan, _, _ = _resolve_substring_scan(docs, L, id_col, text_col, prefilter)
-    wins = _window_fingerprints(scan, L, id_col, text_col)
+    wins = _window_fingerprints(docs, L, id_col, text_col)
     totals = (
         wins.groupBy("h")
         .agg(

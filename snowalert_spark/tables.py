@@ -124,7 +124,7 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     The narrowness test reads ``df.inputFiles()`` — pure driver-side
     file metadata, no Spark jobs (``df.rdd.getNumPartitions()`` would
     EXECUTE every upstream AQE query stage just to count partitions —
-    measured as a per-call re-materialization of the whole prefilter
+    measured as a per-call re-materialization of the whole upstream
     subtree). Fewer source files than cores ⇒ the scan cannot reach
     core-count parallelism (a parquet file with one row group is one
     task no matter what); a non-file source (in-memory batch) counts

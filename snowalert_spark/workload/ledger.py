@@ -17,18 +17,35 @@ Fields per row:
   or never declared);
 - ``added_in``: round the row first existed (defaults to declared_in);
 - ``subsumed_by``: the declared sibling(s) covering its semantics
-  while local (required whenever the row is currently LOCAL_ONLY).
+  while local (required whenever the row is currently LOCAL_ONLY);
+- ``history``: every rotation, oldest first, as ``(round, event,
+  reason)`` with event ``"declared"`` or ``"demoted"``. A row rotated
+  once derives it from the fields above; a row rotated more often
+  passes it, and the fields above are derived from it, so a
+  re-promotion keeps the demotion it undoes and that demotion's reason.
 """
 
 from __future__ import annotations
 
 
-def _e(declared_in=None, demoted_in=None, added_in=None, subsumed_by=""):
+def _e(declared_in=None, demoted_in=None, added_in=None, subsumed_by="",
+       history=None):
+    if history is None:
+        history = ((declared_in, "declared", ""),) if declared_in else ()
+        if demoted_in:
+            history += ((demoted_in, "demoted", subsumed_by),)
+    else:
+        history = tuple(history)
+        declared_in = next(r for r, ev, _ in history if ev == "declared")
+        last_round, last_event, last_reason = history[-1]
+        demoted_in = last_round if last_event == "demoted" else None
+        subsumed_by = last_reason if demoted_in else ""
     return {
         "declared_in": declared_in,
         "demoted_in": demoted_in,
         "added_in": added_in or declared_in,
         "subsumed_by": subsumed_by,
+        "history": history,
     }
 
 
@@ -59,11 +76,11 @@ LEDGER: dict[str, dict] = {
     "curation_filter_pipeline": _e("r7", "r13", subsumed_by="curation_funnel_stats (declared r13; drives the identical signal projection + rule chain — same thresholds — and audits every rule's loss; the per-doc keep/reason projection keeps its local oracle)"),
     "semantic_dedup": _e(declared_in="r8"),
     "dsir_select": _e(declared_in="r8"),
-    # demoted r13 (⊂ dedup_substring_full, bit-identity pinned by
-    # tests/test_substring_combined.py), RE-promoted r14 per the r13
-    # verdict (driver re-verifies the r13 optimizer's hardest-touched
-    # family directly)
-    "dedup_substring_removal": _e(declared_in="r14", added_in="r8"),
+    "dedup_substring_removal": _e(added_in="r8", history=(
+        ("r8", "declared", ""),
+        ("r13", "demoted", "dedup_substring_full (declared r13; bit-identity to the union of the single-purpose halves pinned by tests/test_substring_combined.py) + dedup_substring_cross_snapshot (declared r13; prefix-monotone identity replays the same removal)"),
+        ("r14", "declared", "re-promoted so the driver checks the substring family the r13 optimization touched hardest directly"),
+    )),
     "unigram_logprob_scores": _e("r8", "r14", subsumed_by="bigram_logprob_scores (declared r10; its stupid-backoff tier re-derives the identical add-one unigram model — same LM_VOCAB cap, same corpus total, same 6dp-quantized log-prob — and its oracle replays that chain)"),
     "dedup_image_dhash": _e("r8", "r12", subsumed_by="dedup_image_clusters (declared r12; same decode -> dHash -> multi-block candidate -> popcount-verify pairs feed its rep graph)"),
     "doc_topic_clusters": _e(declared_in="r8"),
@@ -165,10 +182,15 @@ def render_markdown() -> str:
                 name,
                 "local" if local else "declared",
                 e["added_in"] or "—",
-                e["declared_in"] or "—",
-                e["demoted_in"] or "—",
+                _rounds(e, "declared"),
+                _rounds(e, "demoted"),
                 "yes" if name in oracles else "rows-only",
                 e["subsumed_by"] or "—",
             )
         )
     return "\n".join(lines)
+
+
+def _rounds(e: dict, event: str) -> str:
+    """The rounds of every ``event`` in a row's history, oldest first."""
+    return ", ".join(r for r, ev, _ in e["history"] if ev == event) or "—"

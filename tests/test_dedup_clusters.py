@@ -229,3 +229,28 @@ def test_range_derived_graph_labels(spark, entry):
         out = D.connected_components(g, max_iter=1, driver_max_edges=0)
     got = {r["node"]: r["cluster_id"] for r in out.collect()}
     assert got == {n: n - n % 4 for n in range(8)}
+
+
+def test_escalation_starts_from_checkpointed_pairs(spark, monkeypatch):
+    """The escalation hands the star the pairs min-label already
+    checkpointed and counted, not the caller's plan: re-running that
+    plan would evaluate the whole upstream pair pipeline a second
+    time."""
+    seen = []
+    star = D.connected_components_star
+
+    def capture(edges, *a, **k):
+        seen.append(edges)
+        return star(edges, *a, **k)
+
+    monkeypatch.setattr(D, "connected_components_star", capture)
+    g = spark.range(6).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    out = D.connected_components(g, max_iter=1, driver_max_edges=0)
+    assert {r["node"]: r["cluster_id"] for r in out.collect()} == {
+        n: 0 for n in range(7)
+    }
+    (entry,) = seen
+    plan = entry._jdf.queryExecution().analyzed().toString()
+    assert "Range" not in plan, plan

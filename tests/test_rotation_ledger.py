@@ -47,6 +47,28 @@ def test_ledger_counts_match_registry_stats():
                 assert first not in workload.LOCAL_ONLY or first == n or True
 
 
+def test_rotation_history_is_structured():
+    """Every row carries its rotations as data, alternating declared
+    and demoted from a declaration, and its current fields agree with
+    the last event. A re-promotion keeps the demotion it undoes and
+    that demotion's reason: dedup_substring_removal was declared r8,
+    demoted r13 under dedup_substring_full, and re-declared r14."""
+    for name, e in L.LEDGER.items():
+        events = [ev for _, ev, _ in e["history"]]
+        assert events == (["declared", "demoted"] * len(events))[: len(events)], name
+        if events:
+            assert e["declared_in"] == e["history"][0][0], name
+            assert (e["demoted_in"] is None) == (events[-1] == "declared"), name
+        for _, ev, reason in e["history"]:
+            if ev == "demoted":
+                assert reason, f"{name}: demotion without a reason"
+    h = L.LEDGER["dedup_substring_removal"]["history"]
+    assert [(r, ev) for r, ev, _ in h] == [
+        ("r8", "declared"), ("r13", "demoted"), ("r14", "declared"),
+    ]
+    assert h[1][2].startswith("dedup_substring_full")
+
+
 def test_parity_md_table_is_current():
     rendered = L.render_markdown()
     text = open("/root/repo/PARITY.md").read()

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from snowalert_spark.functions import dedup as DD
 from snowalert_spark.streaming import substring_stream_ingest
 
-from test_substring_prefilter import _corpus, _mkdocs, _rand_text
+from test_substring_combined import _corpus, _mkdocs, _rand_text
 
 L = 40
 

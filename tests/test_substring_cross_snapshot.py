@@ -11,7 +11,10 @@ Pins:
    bit-identical to passing base_docs;
 3. base-absent repeats inside the new batch still keep their first
    new occurrence; base-present content is cut from every new doc;
-4. exactly one of base_docs / base_counts must be passed.
+4. exactly one of base_docs / base_counts must be passed;
+5. substring_fingerprint_counts stamps its build ``window`` into the
+   table, and a mismatched or malformed ``base_counts`` is refused
+   while a legacy un-stamped table is still accepted.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ import pytest
 
 from snowalert_spark.functions import dedup as DD
 
-from test_substring_prefilter import _corpus, _mkdocs, _rand_text
+from test_substring_combined import _corpus, _mkdocs, _rand_text
 
 L = 40
 
@@ -53,8 +56,7 @@ def test_union_equivalence(spark, min_count):
         new_ids = {i for i, _ in new_rows}
         want = _rows(
             DD.remove_repeated_substrings(
-                _mkdocs(spark, rows), window=L, min_count=min_count,
-                prefilter=False,
+                _mkdocs(spark, rows), window=L, min_count=min_count
             ).filter(f"doc_id in ({','.join(map(str, new_ids))})")
         )
         assert got == want, f"seed {seed} min_count {min_count}"
@@ -109,4 +111,48 @@ def test_exactly_one_base_argument(spark):
     with pytest.raises(ValueError, match="exactly one"):
         DD.cross_snapshot_substring_removal(
             d, base_docs=d, base_counts=d.limit(0)
+        )
+
+
+def test_base_counts_window_stamp_and_validation(spark):
+    rng = random.Random(31)
+    shared = _rand_text(rng, L + 5)
+    base = _mkdocs(spark, [(1, shared + _rand_text(rng, 30))])
+    new = _mkdocs(spark, [(100, _rand_text(rng, 20) + shared)])
+
+    counts = DD.substring_fingerprint_counts(base, window=L)
+    assert "window" in counts.columns
+    assert counts.select("window").distinct().collect()[0][0] == L
+
+    # stamped + matching: accepted, bit-identical to the base_docs path
+    via_counts = DD.cross_snapshot_substring_removal(
+        new, base_counts=counts, window=L
+    ).collect()
+    via_docs = DD.cross_snapshot_substring_removal(
+        new, base_docs=base, window=L
+    ).collect()
+    assert via_counts == via_docs
+
+    # mismatched window: refused loudly
+    wrong = DD.substring_fingerprint_counts(base, window=L - 10)
+    with pytest.raises(ValueError, match="window=30.*window=40"):
+        DD.cross_snapshot_substring_removal(new, base_counts=wrong, window=L)
+
+    # legacy un-stamped table (pre-r13): still accepted
+    legacy = counts.drop("window")
+    via_legacy = DD.cross_snapshot_substring_removal(
+        new, base_counts=legacy, window=L
+    ).collect()
+    assert via_legacy == via_docs
+
+    # malformed schema: refused loudly
+    with pytest.raises(ValueError, match="n_base"):
+        DD.cross_snapshot_substring_removal(
+            new, base_counts=counts.withColumnRenamed("n_base", "n"), window=L
+        )
+    with pytest.raises(ValueError, match="struct"):
+        DD.cross_snapshot_substring_removal(
+            new,
+            base_counts=counts.selectExpr("h.a AS h", "n_base"),
+            window=L,
         )

@@ -1,7 +1,7 @@
 """Cold-state sidecar (r13 verdict item 2/6): time each named query in
 a FRESH process so every process-local cache is cold — the BPE
-``_MERGE_CACHE``, the k-means ``_CENTROID_CACHE``, the substring
-hit-id pool, codegen, Arrow init. The steady-state bench discards a
+``_MERGE_CACHE``, the k-means ``_CENTROID_CACHE``, codegen, Arrow
+init. The steady-state bench discards a
 warm-up run, so its numbers are "warm session" figures; this sidecar
 records the cold companion for the same rows.
 
@@ -22,7 +22,7 @@ import subprocess
 import sys
 
 DEFAULT_ROWS = [
-    # substring family (hit-id pool + density probes)
+    # substring family (no process cache: cold is codegen + Arrow)
     "dedup_substring_spans",
     "dedup_substring_removal",
     "dedup_substring_full",

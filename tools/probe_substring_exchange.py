@@ -1,8 +1,7 @@
-"""Probe: substring-family wall clock + auto-prefilter overhead.
+"""Probe: substring-family wall clock.
 
 Times (noop sink, warm-up + N runs) the three whole-corpus substring
-operators on the plain path plus the `_resolve_substring_scan` auto
-probe in isolation. Used for the r13 before/after evidence: the
+operators. Used for the r13 before/after evidence: the
 "before" tree carried an explicit (h, salt) repartition of the
 expanded fingerprint stream and no input spread (single-split scans
 serialized the expansion); see OPTIMIZATION_r13.md.
@@ -41,28 +40,13 @@ def main() -> None:
     res: dict = {"sf_dir": sf_dir}
 
     sc = spark.sparkContext
-
-    # --- auto-probe overhead in isolation -----------------------------
-    sc.setJobDescription("substring: auto-probe decision only")
-    t0 = time.perf_counter()
-    scan, used, frac = DD._resolve_substring_scan(d, 40, "doc_id", "text", "auto")
-    res["auto_probe_first_s"] = round(time.perf_counter() - t0, 4)
-    t0 = time.perf_counter()
-    DD._resolve_substring_scan(d, 40, "doc_id", "text", "auto")
-    res["auto_probe_warm_s"] = round(time.perf_counter() - t0, 4)
-    res["auto_used_prefilter"] = used
-    res["auto_hit_frac"] = frac
-
-    for name, build in (
-        ("spans", lambda: DD.repeated_substring_spans(d, prefilter=False)),
-        ("removal", lambda: DD.remove_repeated_substrings(d, prefilter=False)),
-        ("full", lambda: DD.dedupe_substrings(d, prefilter=False)),
-        ("spans_auto", lambda: DD.repeated_substring_spans(d)),
-        ("removal_auto", lambda: DD.remove_repeated_substrings(d)),
-        ("full_auto", lambda: DD.dedupe_substrings(d)),
+    for name, op in (
+        ("spans", DD.repeated_substring_spans),
+        ("removal", DD.remove_repeated_substrings),
+        ("full", DD.dedupe_substrings),
     ):
         sc.setJobDescription(f"substring {name}")
-        res[name] = t_noop(build(), runs)
+        res[name] = t_noop(op(d), runs)
 
     print(json.dumps(res, indent=1))
 
