@@ -76,15 +76,17 @@ def main(
     if lo is None:
         return 0  # nothing to correlate
     pool_from = lo - dt.timedelta(minutes=CORRELATION_WINDOW_MINUTES)
+    # ACTOR as a top-level column: hash partitioning on it then
+    # satisfies all three windows below, so the pass runs one exchange
     pool = live.filter(
         is_todo
         | (
             F.col("correlation_id").isNotNull()
             & (F.col("event_time") >= F.lit(pool_from))
         )
-    )
+    ).withColumn("__actor", F.col("alert.ACTOR"))
 
-    actor = F.col("alert.ACTOR")
+    actor = F.col("__actor")
     obj = F.col("alert.OBJECT")
     act = F.col("alert.ACTION")
     w = W.partitionBy(actor).orderBy("event_time", F.col("alert.ALERT_ID"))

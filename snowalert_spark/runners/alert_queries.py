@@ -97,7 +97,9 @@ def create_alerts(
     )
     # dedupe within the run: one alert per (OBJECT, DESCRIPTION) group
     # (alert_queries_runner.py:64-94); deterministic representative via
-    # min_by on ALERT_ID.
+    # min_by on ALERT_ID. The group keys stay top-level columns and the
+    # MERGE joins on them, so its source side keeps the aggregate's
+    # hash partitioning instead of shuffling again.
     grouped = run.groupBy(
         F.col("alert.OBJECT").alias("_obj"), F.col("alert.DESCRIPTION").alias("_desc")
     ).agg(
@@ -105,15 +107,15 @@ def create_alerts(
         F.sum("counter").alias("counter"),
         F.min("alert_time").alias("alert_time"),
         F.min("event_time").alias("event_time"),
-    ).drop("_obj", "_desc")
+    )
 
     def match(_t, _s):
         # MERGE ON alert:OBJECT = new:OBJECT AND alert:DESCRIPTION =
         # new:DESCRIPTION AND alerts.alert:EVENT_TIME > {from}
         # (alert_queries_runner.py:74-80 — NULLs don't match, = semantics)
         return (
-            (F.col("alert.OBJECT") == F.col("src_alert.OBJECT"))
-            & (F.col("alert.DESCRIPTION") == F.col("src_alert.DESCRIPTION"))
+            (F.col("alert.OBJECT") == F.col("src__obj"))
+            & (F.col("alert.DESCRIPTION") == F.col("src__desc"))
             & (F.col("alert.EVENT_TIME") > F.lit(from_ts))
         )
 

@@ -2,11 +2,13 @@
 
 Each ``*_ALERT_SUPPRESSION`` rule selects ids of alerts to suppress
 (over the data.alerts view, suppressed IS NULL); matching alerts get
-``suppressed=true, suppression_rule=<rule>`` (MERGE, :24-31), and the
-remainder defaults to ``suppressed=false`` (:33-38). The default rides
-on the last rule's MERGE as its WHEN NOT MATCHED BY SOURCE clause, so
-each rule publishes the table once; a separate UPDATE runs only when
-there is no rule or the last one raised."""
+``suppressed=true, suppression_rule=<rule>`` (the reference's MERGE,
+:24-31), and the remainder defaults to ``suppressed=false`` (:33-38).
+Here the MERGE is a key-set merge: alerts whose id is IN the rule's
+ids, planned as one broadcast existence join with no dedupe of the ids.
+The default rides on the last rule's merge as its WHEN NOT MATCHED BY
+SOURCE clause, so each rule publishes the table once; a separate
+UPDATE runs only when there is no rule or the last one raised."""
 
 from __future__ import annotations
 
@@ -44,12 +46,10 @@ def main(
         try:
             register_data_views(spark, store)
             ids = rule.df(spark)
-            id_col = ids.columns[0]
-            ids = ids.select(F.col(id_col).alias("sid")).distinct()
             n = store.upsert(
                 "alerts",
-                ids,
-                on=lambda t, s: F.col("alert.ALERT_ID") == F.col("src_sid"),
+                ids.select(ids.columns[0]),
+                on="alert.ALERT_ID",
                 when_matched={
                     "suppressed": F.lit(True),
                     "suppression_rule": F.lit(rule.name),

@@ -3,10 +3,11 @@
 Error quarantine is a core product behavior (SURVEY §4): a failing
 rule writes an ERROR metadata row and the run continues.
 
-Each record is one ``(event_time, v)`` row appended to the table. The
-row is built with ``store.local_frame``, so the append is one JVM-only
-job (no Python worker), and ``event_time`` is the naive ``end`` read
-in the session time zone, whatever the process's local zone."""
+Each record is one ``(event_time, v)`` row appended to the table with
+``ResultsStore.append_rows``: pyarrow writes it and the store publishes
+it, so recording runs no Spark job, and ``event_time`` is the naive
+``end`` read in the session time zone, whatever the process's local
+zone."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import traceback
 
 from pyspark.sql import functions as F
 
-from snowalert_spark.store import ResultsStore, local_frame
+from snowalert_spark.store import ResultsStore
 
 
 def record(
@@ -49,10 +50,7 @@ def record(
             ),
             "EXCEPTION_ONLY": str(error),
         }
-    df = local_frame(
-        store.spark, [(end, json.dumps(v, default=str))], store.schema(table)
-    )
-    store.append(table, df)
+    store.append_rows(table, [(end, json.dumps(v, default=str))])
     return v
 
 

@@ -7,8 +7,8 @@ nulls-omitted) JSON of the row's IDENTITY or its canonical key subset
 (db.py:465-492) — stable across runs for cross-day dedupe/suppression.
 A 1-day alert_time cutoff applies when the rule exposes alert_time
 (db.py:491,499). Suppressions then flag by id and default the rest to
-false, the default riding on the last suppression's MERGE (see
-``alert_suppressions``)."""
+false: one key-set merge per rule, the default riding on the last one
+(see ``alert_suppressions``)."""
 
 from __future__ import annotations
 
@@ -146,11 +146,10 @@ def suppress(
         try:
             store.read("violations").createOrReplaceTempView("data_violations")
             ids = rule.df(spark)
-            ids = ids.select(F.col(ids.columns[0]).alias("sid")).distinct()
             n = store.upsert(
                 "violations",
-                ids,
-                on=lambda t, s: F.col("id") == F.col("src_sid"),
+                ids.select(ids.columns[0]),
+                on="id",
                 when_matched={
                     "suppressed": F.lit(True),
                     "suppression_rule": F.lit(rule.name),

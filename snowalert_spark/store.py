@@ -11,10 +11,13 @@ Layout: ``{base}/{table}/v=N/…parquet``. Every write publishes
 version N+1 through one routine (``_publish``): the new version's files
 are filled into a hidden ``.inflight-*`` dir, which is then renamed to
 ``v=N+1``. Readers always pick the highest complete version, and a
-crashed writer leaves only an ignored hidden dir. An ``append`` writes
-its rows once into a staging dir; the publish hard-links the current
-version's files and the staged ones into the next version, so no row
-is rewritten and a merge that read ``v=N`` can never drop them.
+crashed writer leaves only an ignored hidden dir. A superseded version
+is retired to a tombstone (its ``_SUCCESS`` and data files removed, a
+``_RETIRED`` marker left), so its slot stays non-empty and no late
+rename can publish into it. An ``append`` writes its rows once into a
+staging dir; the publish hard-links the current version's files and
+the staged ones into the next version, so no row is rewritten and a
+merge that read ``v=N`` can never drop them.
 
 Single-pass commits: a MERGE (``upsert``) or ``update`` is one lazy
 plan — scan the version it read, join, write the next version — run by
@@ -23,16 +26,22 @@ the returned row counts come from a ``pyspark.sql.Observation`` on the
 frame being written, which Spark fills during that same write job.
 A merge's ``when_not_matched_by_source`` map (SQL ``WHEN NOT MATCHED BY
 SOURCE``) updates target-only rows in that same pass, so a MERGE
-followed by an UPDATE of the rows it did not match publishes once.
+followed by an UPDATE of the rows it did not match publishes once. A
+merge whose source is only a set of keys (``on`` a single target
+column) is planned as ``key IN (source)``: an existence join with the
+source broadcast, so neither side is deduplicated or shuffled.
 
-Frames built on the driver (metadata rows, dispatcher results, the
-empty frame of an absent table) go through ``local_frame``: an Arrow
-table handed straight to the JVM, so writing them starts no Python
-worker, and naive datetimes are read in the session time zone.
+Rows built on the driver take one of two Arrow paths, and neither
+starts a Python worker; naive datetimes are read in the session time
+zone on both. ``append_rows`` (metadata records) writes them with
+pyarrow as one parquet file and publishes it, so it runs no Spark job.
+``local_frame`` (dispatcher results, the empty frame of an absent
+table) hands them to the JVM as a frame that joins a Spark plan.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -41,12 +50,22 @@ from collections.abc import Callable
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from snowalert_spark.schema import RESULT_TABLES
+
+
+def _arrow_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
+    """``rows`` as an Arrow table typed by ``schema``, timestamps tz-naive."""
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema, timestamp_utc=False),
+    )
 
 
 def local_frame(
@@ -59,17 +78,13 @@ def local_frame(
     goes to the JVM as record batches instead. Timestamps are typed
     tz-naive, so Spark reads naive datetimes as wall-clock time in the
     session time zone (not the Python process's local zone)."""
-    arrow_schema = to_arrow_schema(schema, timestamp_utc=False)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
-    )
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(_arrow_rows(rows, schema), schema)
 
 
 def merge_plan(
     target: DataFrame,
     incoming: DataFrame,
-    on: list[str] | Column | Callable[[DataFrame, DataFrame], Column],
+    on: str | list[str] | Column | Callable[[DataFrame, DataFrame], Column],
     schema: T.StructType,
     when_matched: dict[str, Column] | None,
     when_not_matched_insert: bool,
@@ -85,7 +100,34 @@ def merge_plan(
     absent), and source-only rows are inserted when
     ``when_not_matched_insert`` — otherwise the join is a left join, so
     no source-only row exists. The Observation yields
-    ``{"updated", "inserted"}`` once the frame has been written."""
+    ``{"updated", "inserted"}`` once the frame has been written.
+
+    ``on`` as a single name (a target column or nested field) makes
+    ``incoming`` a key set: a target row matches when its key is IN
+    ``incoming``'s one column. That is an existence join, so a key
+    repeated in the source still matches its row once, and
+    ``when_matched`` sees no source column. Nothing is inserted."""
+    upd = when_matched or {}
+    by_src = when_not_matched_by_source or {}
+    if isinstance(on, str):
+        if when_not_matched_insert:
+            raise ValueError("a key-set merge inserts nothing")
+        # the subquery is planned once, as a column the observation reads
+        hit = target.withColumn(
+            "__hit", F.coalesce(F.col(on).isin(incoming), F.lit(False))
+        )
+        obs = Observation()
+        hit = hit.observe(
+            obs, F.count_if("__hit").alias("updated"), F.lit(0).alias("inserted")
+        )
+        cols = [
+            F.when(F.col("__hit"), upd.get(f.name, F.col(f.name)))
+            .otherwise(by_src.get(f.name, F.col(f.name)))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in schema
+        ]
+        return hit.select(*cols), obs
     src = incoming.select(
         *[F.col(c).alias(f"src_{c}") for c in incoming.columns]
     ).withColumn("__src", F.lit(True))
@@ -105,8 +147,6 @@ def merge_plan(
         F.count_if(matched).alias("updated"),
         F.count_if(~has_tgt).alias("inserted"),
     )
-    upd = when_matched or {}
-    by_src = when_not_matched_by_source or {}
     in_cols = set(incoming.columns)
     cols = [
         F.when(matched, upd.get(f.name, F.col(f.name)))
@@ -128,6 +168,23 @@ def _link_parquet(srcs: list[str | None], dst: str) -> None:
             if name.endswith(".parquet"):
                 os.link(os.path.join(src, name), os.path.join(dst, name))
     open(os.path.join(dst, "_SUCCESS"), "w").close()
+
+
+def _retire(vdir: str) -> None:
+    """Turn a published version into a tombstone: readers stop picking
+    it once ``_SUCCESS`` is gone, its data files are removed, and the
+    ``_RETIRED`` marker keeps the dir non-empty, so posix refuses a
+    late writer's rename into the slot."""
+    try:
+        os.unlink(os.path.join(vdir, "_SUCCESS"))
+        open(os.path.join(vdir, "_RETIRED"), "w").close()
+        names = os.listdir(vdir)
+    except FileNotFoundError:  # another publish retired it first
+        return
+    for name in names:
+        if name != "_RETIRED":
+            with contextlib.suppress(OSError):
+                os.unlink(os.path.join(vdir, name))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -199,8 +256,10 @@ class ResultsStore:
         version is listed afterwards (that covers a version retired
         while ``fill`` read it); any other error is re-raised as is. A
         version that appeared while ``fill`` ran fails the publish
-        before the rename: its slot ``v=N+1`` may already be retired,
-        and a rename into it would publish a version no reader picks.
+        before the rename. One that appears between that re-list and
+        the rename may already have retired ``v=N+1``; the slot is then
+        a non-empty tombstone, so the rename fails the same way instead
+        of publishing a version no reader picks.
 
         ``expect_version`` (read-merge-write callers: the version the
         merge was computed FROM; -1 for an empty table) additionally
@@ -232,7 +291,7 @@ class ResultsStore:
         # for readers that planned on it; a write still reading an older
         # one fails above as lost.
         for v in vs[:-1]:
-            shutil.rmtree(os.path.join(tdir, f"v={v}"), ignore_errors=True)
+            _retire(os.path.join(tdir, f"v={v}"))
 
     def append(self, table: str, df: DataFrame) -> int:
         """Publish the current rows plus ``df``'s as the next version;
@@ -248,19 +307,44 @@ class ResultsStore:
         staged = self._inflight(table)
         try:
             df.write.parquet(staged)
-            n = obs.get["n"]
-            if n == 0 and self._versions(table):
-                return 0
-            while True:
-                try:
-                    self._publish(
-                        table, lambda tmp, cur: _link_parquet([cur, staged], tmp)
-                    )
-                    return n
-                except ConcurrentWriteError:
-                    continue
+            return self._publish_staged(table, staged, obs.get["n"])
         finally:
             shutil.rmtree(staged, ignore_errors=True)
+
+    def append_rows(self, table: str, rows: list[tuple]) -> int:
+        """``append`` for a few flat rows built on the driver, with no
+        Spark job: pyarrow writes them as one parquet file into the
+        staging dir. Naive datetimes are read in the session time zone,
+        as ``local_frame`` reads them, and stored as UTC instants."""
+        arrow = _arrow_rows(rows, self.schema(table))
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        for i, col in enumerate(arrow.columns):
+            if pa.types.is_timestamp(col.type):
+                instants = pc.assume_timezone(col, tz).cast(pa.timestamp("us", "UTC"))
+                arrow = arrow.set_column(i, arrow.field(i).name, instants)
+        staged = self._inflight(table)
+        try:
+            os.makedirs(staged)
+            pq.write_table(
+                arrow, os.path.join(staged, f"part-{uuid.uuid4().hex}.parquet")
+            )
+            return self._publish_staged(table, staged, len(rows))
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+
+    def _publish_staged(self, table: str, staged: str, n: int) -> int:
+        """Publish the ``n`` rows staged in ``staged`` on top of the
+        current version, relinking while newer versions beat it."""
+        if n == 0 and self._versions(table):
+            return 0
+        while True:
+            try:
+                self._publish(
+                    table, lambda tmp, cur: _link_parquet([cur, staged], tmp)
+                )
+                return n
+            except ConcurrentWriteError:
+                continue
 
     def overwrite(
         self, table: str, df: DataFrame, expect_version: int | None = None
@@ -277,18 +361,21 @@ class ResultsStore:
         concurrent writer racing the pass loses exactly one side
         (ConcurrentWriteError, table never a mix), the same contract
         as ``upsert``. No-op (no new version) when nothing would be
-        evicted. Returns {kept, evicted} row counts."""
+        evicted. Returns {kept, evicted} row counts: both are observed
+        in one scan with no exchange, so a no-op pass is one job."""
         vs = self._versions(table)
         if not vs:
             return {"kept": 0, "evicted": 0}
         cur = vs[-1]
         df = self.read(table)
-        kept = df.filter(keep)
-        n_all = df.count()
-        n_keep = kept.count()
+        obs = Observation()
+        df.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.count_if(keep).alias("kept")
+        ).write.format("noop").mode("overwrite").save()
+        n_all, n_keep = obs.get["n"], obs.get["kept"]
         if n_keep == n_all:
             return {"kept": n_all, "evicted": 0}
-        self.overwrite(table, kept, expect_version=cur)
+        self.overwrite(table, df.filter(keep), expect_version=cur)
         return {"kept": n_keep, "evicted": n_all - n_keep}
 
     # -- merge (the MERGE INTO replacement) ------------------------------
@@ -296,7 +383,7 @@ class ResultsStore:
         self,
         table: str,
         incoming: DataFrame,
-        on: list[str] | Column | Callable[[DataFrame, DataFrame], Column],
+        on: str | list[str] | Column | Callable[[DataFrame, DataFrame], Column],
         when_matched: dict[str, Column] | None = None,
         when_not_matched_insert: bool = True,
         partition_filter: Column | None = None,
@@ -306,7 +393,10 @@ class ResultsStore:
 
         - ``on``: join keys (list of column names) or a function
           ``(target, source) -> Column`` for theta-matches (the alert
-          dedupe matches on document paths + a time bound, J8).
+          dedupe matches on document paths + a time bound, J8); or
+          one target column name, for a key-set merge: ``incoming``'s
+          one column lists the keys to match, tested as ``key IN
+          (incoming)`` (the suppression runners flag ids this way).
         - ``when_matched``: target-column updates as expressions over
           the joined row; source columns are available with ``src_``
           prefix.

@@ -172,6 +172,36 @@ def test_write_overtaken_by_three_publishes_fails(spark, tmp_path, write):
     assert _no_inflight(base)
 
 
+def test_append_overtaken_inside_its_rename_relinks(spark, tmp_path, monkeypatch):
+    """Three appends publish after a writer's last re-list, inside its
+    rename into ``v=1``. The third retires ``v=1``; the retired slot is
+    a non-empty tombstone, so the late rename fails and the append
+    relinks on top of ``v=3`` instead of publishing a version no reader
+    picks."""
+    base = str(tmp_path / "results")
+    a, b = ResultsStore(spark, base), ResultsStore(spark, base)
+    a.overwrite("violations", _violation(spark, "seed"))
+    real_rename = os.rename
+    fired = []
+
+    def racing(src, dst):
+        if not fired:
+            fired.append(dst)
+            for i in range(3):
+                b.append("violations", _violation(spark, f"b{i}"))
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", racing)
+    assert a.append("violations", _violation(spark, "from_a")) == 1
+    monkeypatch.undo()
+    assert os.path.basename(fired[0]) == "v=1"
+    ids = sorted(r.id for r in a.read("violations").collect())
+    assert ids == ["b0", "b1", "b2", "from_a", "seed"]
+    assert a._versions("violations") == [3, 4]
+    assert os.listdir(os.path.join(base, "violations", "v=1")) == ["_RETIRED"]
+    assert _no_inflight(base)
+
+
 def test_parallel_appends_all_land(spark, tmp_path):
     """Appends commute: eight writers appending to one table at once
     each relink on top of whichever version beat them."""

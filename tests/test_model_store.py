@@ -233,3 +233,25 @@ def test_retention_loses_cas_race(spark, model_dir, monkeypatch):
     monkeypatch.setattr(store, "read", read_then_race)
     with pytest.raises(ConcurrentWriteError):
         store.retain("trained_centroids", F.lit(False))
+
+
+def test_retain_counts_in_one_job(spark, model_dir, last_job_id):
+    """``retain`` observes the count of all rows and of the kept ones
+    in one scan job; only a pass that evicts adds its write."""
+    store = ResultsStore(spark, model_dir)
+    rows = [(f"corpus-v{i % 2}|k=4|iters=2", i, [float(i)]) for i in range(6)]
+    store.overwrite(
+        "trained_centroids",
+        spark.createDataFrame(rows, store.schema("trained_centroids")),
+    )
+    v0 = store._versions("trained_centroids")
+    before = last_job_id()
+    assert store.retain("trained_centroids", F.lit(True)) == {"kept": 6, "evicted": 0}
+    assert last_job_id() - before == 1
+    assert store._versions("trained_centroids") == v0
+
+    before = last_job_id()
+    keep = F.col("model_key").startswith("corpus-v0|")
+    assert store.retain("trained_centroids", keep) == {"kept": 3, "evicted": 3}
+    assert last_job_id() - before == 2
+    assert sorted(r.cell for r in store.read("trained_centroids").collect()) == [0, 2, 4]

@@ -349,11 +349,41 @@ def test_metadata_event_time_follows_session_zone(store):
     assert row.t == v["END_TIME"].replace("T", " ") == "2024-07-01 12:00:00"
 
 
-def test_metadata_frame_stays_jvm_side(store):
-    frames = _capturing(store, "append")
-    metadata.record(store, "query_metadata", "r1", query_name="q")
-    (df,) = frames
-    assert "PythonRDD" not in _lineage(df)
+def test_metadata_event_time_in_a_non_utc_session_zone(spark, store):
+    """A naive ``end`` is read in the session zone even when that zone
+    is not UTC, on either side of a DST change: the row holds the
+    instant, and reads back as the same wall-clock time."""
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        for d in (dt.datetime(2024, 1, 1, 12), dt.datetime(2024, 7, 1, 12)):
+            metadata.record(store, "run_metadata", "r1", end=d)
+        local = store.read("run_metadata").selectExpr("cast(event_time AS string) t")
+        assert sorted(r.t for r in local.collect()) == [
+            "2024-01-01 12:00:00", "2024-07-01 12:00:00",
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    utc = store.read("run_metadata").selectExpr("cast(event_time AS string) t")
+    assert sorted(r.t for r in utc.collect()) == [
+        "2024-01-01 17:00:00", "2024-07-01 16:00:00",
+    ]
+
+
+def test_metadata_record_runs_no_spark_job(store, last_job_id):
+    """Recording writes its row with pyarrow and publishes it without
+    Spark, into a new table and into an existing one alike; an ERROR
+    row reads back through Spark like any other."""
+    before = last_job_id()
+    metadata.record(store, "query_metadata", "r1", query_name="q1")
+    metadata.record(
+        store, "query_metadata", "r1", query_name="q2", error=ValueError("boom")
+    )
+    assert last_job_id() == before
+    md = metadata.read_metadata(store, "query_metadata")
+    assert [m["QUERY_NAME"] for m in md] == ["q1", "q2"]
+    assert "ERROR" not in md[0]
+    assert md[1]["ERROR"]["EXCEPTION_ONLY"] == "boom"
 
 
 def test_dispatcher_update_frame_stays_jvm_side(spark, store, registry):
@@ -493,3 +523,167 @@ def test_suppression_fold_without_rules_still_defaults(spark, store, table):
     assert {k: s for k, (s, _) in _flags(store, table).items()} == {
         "a": False, "b": False, "c": False, "d": True,
     }
+
+
+# -- scheduled ticks: job budget, and the benchmark's traced store ---------
+
+# two hourly ticks over the 90-minute window; the second one's MERGE
+# meets the first one's alerts
+TICKS = [
+    (T0 - dt.timedelta(minutes=150), T0 - dt.timedelta(minutes=60)),
+    (T0 - dt.timedelta(minutes=90), T0),
+]
+
+
+def _tick_registry(spark):
+    """One rule of each kind over 240 events from 10:00 to 12:00: the
+    alert rule's groups span several actors and hosts, the
+    suppressions flag part of each table."""
+    spark.range(240).selectExpr(
+        "concat('user:', id % 7) AS actor",
+        "concat('host-', id % 11) AS object",
+        "IF(id % 3 = 0, 'delete', 'read') AS action",
+        "timestamp_seconds(unix_seconds(TIMESTAMP '2024-01-01 10:00:00')"
+        " + id * 30) AS event_time",
+        "concat('by user ', id % 5) AS description",
+    ).createOrReplaceTempView("tick_events")
+    reg = RuleRegistry()
+    reg.create(
+        "_TICK_ALERT_QUERY",
+        sql="SELECT *, 'tick alert' AS title FROM tick_events",
+        comment="tick alerts\n@id tick_id",
+    )
+    reg.create(
+        "_TICK_ALERT_SUPPRESSION",
+        sql=(
+            "SELECT alert.ALERT_ID AS id FROM data_alerts "
+            "WHERE suppressed IS NULL AND alert.OBJECT IN ('host-0', 'host-2')"
+        ),
+        comment="maintenance hosts",
+    )
+    reg.create(
+        "_TICK_VIOLATION_QUERY",
+        sql=(
+            "SELECT concat('host-', id) AS OBJECT, 'open port' AS TITLE, "
+            "concat('team-', id % 3) AS OWNER FROM range(12)"
+        ),
+        comment="open ports\n@id tick_v_id",
+    )
+    reg.create(
+        "_TICK_VIOLATION_SUPPRESSION",
+        sql=(
+            "SELECT id FROM data_violations "
+            "WHERE get_json_object(result, '$.OWNER') = 'team-0'"
+        ),
+        comment="team 0",
+    )
+    return reg
+
+
+def _tick(spark, store, reg, lo, hi):
+    """The steps of ``run.run_alerts`` then ``run.run_violations``,
+    each called on its own so the caller can measure it."""
+    return [
+        ("alert_queries", lambda: alert_queries.main(
+            spark, store, reg, from_ts=lo, to_ts=hi)),
+        ("alert_suppressions", lambda: alert_suppressions.main(spark, store, reg)),
+        ("alert_processor", lambda: alert_processor.main(spark, store, now=hi)),
+        ("alert_dispatcher", lambda: alert_dispatcher.main(spark, store)),
+        ("violation_query", lambda: violation_queries.main(spark, store, reg, now=hi)),
+        ("violation_suppression", lambda: violation_queries.suppress(spark, store, reg)),
+    ]
+
+
+def _assert_ticks_outcome(store):
+    """No rule failed, and two ticks left every table as the reference
+    would: maintenance hosts suppressed, every other alert correlated
+    and dispatched, team 0's violations suppressed."""
+    md = metadata.read_metadata(store, "query_metadata")
+    assert [m for m in md if "ERROR" in m] == []
+    assert len(md) == 8
+    alerts = store.read("alerts").select(
+        F.col("alert.OBJECT").isin("host-0", "host-2").alias("maint"),
+        "suppressed",
+        "correlation_id",
+        "handled",
+    ).collect()
+    assert len(alerts) >= 55  # 11 hosts x 5 descriptions
+    for r in alerts:
+        assert r.suppressed is r.maint
+        assert (r.correlation_id is None) is (r.handled is None) is r.maint
+    v = {
+        r.suppressed: r.n
+        for r in store.read("violations").groupBy("suppressed")
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert v == {True: 8, False: 16}
+
+
+# Spark jobs per step of a tick over existing alerts. Each budget is
+# what the step needs: the rule's aggregate and the MERGE's target
+# exchange and write for the queries (the MERGE's source keeps the
+# aggregate's partitioning); the suppression's broadcast of its ids and
+# the write; the processor's scalar lower bound, one exchange for its
+# three windows, the MERGE's two sides and the write; the dispatcher's
+# collect and its MERGE. Metadata records add none.
+TICK_JOB_BUDGET = {
+    "alert_queries": 3,
+    "alert_suppressions": 2,
+    "alert_processor": 5,
+    "alert_dispatcher": 3,
+    "violation_query": 1,
+    "violation_suppression": 2,
+}
+
+
+def test_tick_job_budget(spark, store, last_job_id):
+    """A tick over the alerts an earlier tick left stays within its job
+    budget, step by step: metadata rows are written without Spark, each
+    suppression is one existence-join write, and the processor's windows
+    and the queries' MERGE run one exchange each."""
+    reg = _tick_registry(spark)
+    H.register("jira", H.MemoryTicketHandler().handle)
+    for _, step in _tick(spark, store, reg, *TICKS[0]):
+        step()
+    jobs = {}
+    for name, step in _tick(spark, store, reg, *TICKS[1]):
+        before = last_job_id()
+        step()
+        jobs[name] = last_job_id() - before
+    _assert_ticks_outcome(store)
+    over = {k: n for k, n in jobs.items() if n > TICK_JOB_BUDGET[k]}
+    assert over == {}, f"steps over budget: {over} (all: {jobs})"
+
+
+def test_tick_through_traced_store(spark, store):
+    """The benchmark's traced runs hand the runners its ``TracedStore``
+    proxy and wrap the runner entry points. A tick through them must
+    record no ERROR row (a store call the proxy cannot pass on fails
+    inside the rule quarantine) and leave the same table states."""
+    import importlib.util
+
+    from snowalert_spark import run
+
+    path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), os.pardir, "perfbench", "spans.py"
+    )
+    spec = importlib.util.spec_from_file_location("perfbench_spans", path)
+    spans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spans)
+
+    reg = _tick_registry(spark)
+    H.register("jira", H.MemoryTicketHandler().handle)
+    for _, step in _tick(spark, store, reg, *TICKS[0]):
+        step()
+    tracer = spans.Tracer(spark)
+    traced = spans.TracedStore(store, tracer)
+    lo, hi = TICKS[1]
+    with spans.installed(tracer), tracer.span("run"):
+        run.run_alerts(spark, traced, reg, from_ts=lo, to_ts=hi)
+        run.run_violations(spark, traced, reg)
+    tracer.collect_jobs(tracer.spans)
+    layer = spans.summarize(tracer.spans)
+    _assert_ticks_outcome(store)
+    assert layer["runners.metadata.record.calls"] == 4
+    assert layer["store.upsert.calls"] == 5
+    assert layer["handlers.calls"] >= 1 and layer["handlers.failed"] == 0

@@ -5,6 +5,7 @@ sibling(s), and the PARITY.md table is the current rendering."""
 
 from __future__ import annotations
 
+import os
 import re
 
 from snowalert_spark import workload
@@ -71,7 +72,10 @@ def test_rotation_history_is_structured():
 
 def test_parity_md_table_is_current():
     rendered = L.render_markdown()
-    text = open("/root/repo/PARITY.md").read()
+    here = os.path.dirname(os.path.abspath(__file__))
+    path = os.path.join(here, os.pardir, "PARITY.md")
+    with open(path) as f:
+        text = f.read()
     m = re.search(
         r"<!-- LEDGER:BEGIN -->\n(.*?)\n<!-- LEDGER:END -->", text, re.S
     )

@@ -340,3 +340,29 @@ def test_read_of_absent_table_stays_jvm_side(store):
         assert df.schema == schema, table
         assert df.count() == 0, table
         assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_key_set_upsert(store, spark):
+    """``on`` one target column: the source is a set of keys tested
+    with IN, so a repeated key matches its row once and a NULL key
+    matches nothing; the by-source map covers the other rows in the
+    same publish, and nothing is ever inserted."""
+    store.overwrite("violations", _violations(spark, ["a", "b", "c"]))
+    v0 = store._versions("violations")[-1]
+    keys = spark.createDataFrame([("a",), ("a",), (None,), ("zz",)], "k string")
+    n = _returns(
+        lambda: store.upsert(
+            "violations",
+            keys,
+            on="id",
+            when_matched={"suppressed": F.lit(True)},
+            when_not_matched_insert=False,
+            when_not_matched_by_source={"suppressed": F.lit(False)},
+        )
+    )
+    assert n == {"updated": 1, "inserted": 0}
+    assert store._versions("violations")[-1] == v0 + 1
+    got = {r.id: r.suppressed for r in store.read("violations").collect()}
+    assert got == {"a": True, "b": False, "c": False}
+    with pytest.raises(ValueError, match="inserts nothing"):
+        store.upsert("violations", keys, on="id")
