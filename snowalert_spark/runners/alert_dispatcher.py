@@ -67,7 +67,7 @@ def main(spark: SparkSession, store: ResultsStore) -> int:
     store.upsert(
         "alerts",
         upd,
-        on=lambda t, s: F.col("alert.ALERT_ID") == F.col("src_aid"),
+        on=F.col("alert.ALERT_ID") == F.col("src_aid"),
         when_matched={
             "handled": F.col("src_handled"),
             "ticket": F.col("src_ticket"),

@@ -133,7 +133,7 @@ def main(
     n = store.upsert(
         "alerts",
         corr,
-        on=lambda t, s: F.col("alert.ALERT_ID") == F.col("src_aid"),
+        on=F.col("alert.ALERT_ID") == F.col("src_aid"),
         when_matched={"correlation_id": F.col("src_corr")},
         when_not_matched_insert=False,
     )

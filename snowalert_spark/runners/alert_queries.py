@@ -6,13 +6,13 @@ Pipeline per rule (SURVEY §3.1):
   (matched: counter += ; not matched: insert).
 
 The reference's transient spool table is unnecessary (DataFrames are
-the spool); error quarantine and per-rule metadata are preserved.
+the spool); error quarantine and per-rule metadata are
+``metadata.run_rules``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,16 +109,14 @@ def create_alerts(
         F.min("event_time").alias("event_time"),
     )
 
-    def match(_t, _s):
-        # MERGE ON alert:OBJECT = new:OBJECT AND alert:DESCRIPTION =
-        # new:DESCRIPTION AND alerts.alert:EVENT_TIME > {from}
-        # (alert_queries_runner.py:74-80 — NULLs don't match, = semantics)
-        return (
-            (F.col("alert.OBJECT") == F.col("src__obj"))
-            & (F.col("alert.DESCRIPTION") == F.col("src__desc"))
-            & (F.col("alert.EVENT_TIME") > F.lit(from_ts))
-        )
-
+    # MERGE ON alert:OBJECT = new:OBJECT AND alert:DESCRIPTION =
+    # new:DESCRIPTION AND alerts.alert:EVENT_TIME > {from}
+    # (alert_queries_runner.py:74-80 — NULLs don't match, = semantics)
+    match = (
+        (F.col("alert.OBJECT") == F.col("src__obj"))
+        & (F.col("alert.DESCRIPTION") == F.col("src__desc"))
+        & (F.col("alert.EVENT_TIME") > F.lit(from_ts))
+    )
     return store.upsert(
         "alerts",
         grouped,
@@ -140,31 +138,17 @@ def main(
     process pool because each query is a blocking warehouse call; under
     Spark, rule plans share one scheduler and local[N] parallelism, so
     thread fan-out only helps overlap driver-side planning."""
-    run_id = run_id or uuid.uuid4().hex
     # to_ts stays None on the default path: the window's upper bound is
     # then query-time CURRENT_TIMESTAMP (reference parity, see
     # create_alerts); explicit backfill ranges pass both bounds.
     from_ts = from_ts or (
         (to_ts or dt.datetime.utcnow()) - dt.timedelta(minutes=CUTOFF_MINUTES)
     )
-    results = []
-    for rule in registry.load_rules(ALERT_QUERY):
-        start = dt.datetime.utcnow()
-        try:
-            counts = create_alerts(spark, store, rule, from_ts, to_ts)
-            err = None
-        except Exception as e:  # error quarantine: record and continue
-            counts, err = None, e
-        results.append(
-            metadata.record(
-                store,
-                "query_metadata",
-                run_id,
-                query_name=rule.name,
-                run_type="ALERT QUERY",
-                start=start,
-                row_counts=counts,
-                error=err,
-            )
-        )
-    return results
+    return metadata.run_rules(
+        store,
+        "query_metadata",
+        run_id,
+        registry.load_rules(ALERT_QUERY),
+        "ALERT QUERY",
+        lambda rule: create_alerts(spark, store, rule, from_ts, to_ts),
+    )

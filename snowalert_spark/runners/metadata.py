@@ -1,7 +1,10 @@
 """Run/query metadata recording (db.record_metadata, db.py:556-598).
 
 Error quarantine is a core product behavior (SURVEY §4): a failing
-rule writes an ERROR metadata row and the run continues.
+rule writes an ERROR metadata row and the run continues. ``run_rules``
+is that loop, for every rule kind: alert and violation queries, both
+suppression tables and policies each hand it their rules and a body
+that runs one rule and returns its row counts.
 
 Each record is one ``(event_time, v)`` row appended to the table with
 ``ResultsStore.append_rows``: pyarrow writes it and the store publishes
@@ -14,9 +17,12 @@ from __future__ import annotations
 import datetime as dt
 import json
 import traceback
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import functions as F
 
+from snowalert_spark.rules import Rule
 from snowalert_spark.store import ResultsStore
 
 
@@ -52,6 +58,41 @@ def record(
         }
     store.append_rows(table, [(end, json.dumps(v, default=str))])
     return v
+
+
+def run_rules(
+    store: ResultsStore,
+    table: str,
+    run_id: str | None,
+    rules: list[Rule],
+    run_type: str,
+    body: Callable[[Rule], dict],
+) -> list[dict]:
+    """Run ``body(rule)`` for each rule in turn, timed, and record one
+    row per rule under ``run_id`` (a fresh one when None): its row
+    counts, or an ERROR row if ``body`` raised, after which the next
+    rule still runs. Returns the recorded dicts in ``rules`` order."""
+    run_id = run_id or uuid.uuid4().hex
+    results = []
+    for rule in rules:
+        start = dt.datetime.utcnow()
+        try:
+            counts, err = body(rule), None
+        except Exception as e:  # error quarantine: record and continue
+            counts, err = None, e
+        results.append(
+            record(
+                store,
+                table,
+                run_id,
+                query_name=rule.name,
+                run_type=run_type,
+                start=start,
+                row_counts=counts,
+                error=err,
+            )
+        )
+    return results
 
 
 def read_metadata(store: ResultsStore, table: str) -> list[dict]:

@@ -1,16 +1,14 @@
 """Policy rules (``*_POLICY_DEFINITION``): evaluated inline on read —
 each policy view yields (title, passing) rows (reference:
 webui/backend/webui/api/rules.py:55-59, 108-113). The runner collects
-per-policy pass/fail counts and records them as metadata."""
+per-policy pass/fail counts and records them as ``run_metadata`` rows
+through ``metadata.run_rules`` (a failing policy: an ERROR row)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import re
-import uuid
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from snowalert_spark.rules import POLICY_DEFINITION, RuleRegistry
 from snowalert_spark.runners import metadata
@@ -60,43 +58,27 @@ def list_rules(
 
 def main(
     spark: SparkSession,
-    store: ResultsStore | None,
+    store: ResultsStore,
     registry: RuleRegistry,
     run_id: str | None = None,
 ) -> list[dict]:
-    run_id = run_id or uuid.uuid4().hex
-    results = []
-    for rule in registry.load_rules(POLICY_DEFINITION):
-        start = dt.datetime.utcnow()
-        try:
-            rows = rule.df(spark).collect()
-            checks = [
-                {"title": r["title"], "passing": bool(r["passing"])} for r in rows
-            ]
-            counts = {
-                "checks": len(checks),
-                "passing": sum(c["passing"] for c in checks),
-            }
-            err = None
-        except Exception as e:
-            checks, counts, err = [], None, e
-        results.append(
-            {
-                "rule": rule.name,
-                "title": rule.title,
-                "results": checks,
-                **(counts or {}),
-            }
-        )
-        if store is not None:
-            metadata.record(
-                store,
-                "run_metadata",
-                run_id,
-                query_name=rule.name,
-                run_type="POLICY",
-                start=start,
-                row_counts=counts,
-                error=err,
-            )
-    return results
+    rules = registry.load_rules(POLICY_DEFINITION)
+    checks: dict[str, list[dict]] = {}
+
+    def body(rule):
+        found = checks[rule.name] = [
+            {"title": r["title"], "passing": bool(r["passing"])}
+            for r in rule.df(spark).collect()
+        ]
+        return {"checks": len(found), "passing": sum(c["passing"] for c in found)}
+
+    recorded = metadata.run_rules(store, "run_metadata", run_id, rules, "POLICY", body)
+    return [
+        {
+            "rule": rule.name,
+            "title": rule.title,
+            "results": checks.get(rule.name, []),
+            **md.get("ROW_COUNT", {}),
+        }
+        for rule, md in zip(rules, recorded)
+    ]

@@ -6,21 +6,21 @@ content-addressed id: MD5 of the canonical (compact, key-sorted,
 nulls-omitted) JSON of the row's IDENTITY or its canonical key subset
 (db.py:465-492) — stable across runs for cross-day dedupe/suppression.
 A 1-day alert_time cutoff applies when the rule exposes alert_time
-(db.py:491,499). Suppressions then flag by id and default the rest to
-false: one key-set merge per rule, the default riding on the last one
-(see ``alert_suppressions``)."""
+(db.py:491,499). Each rule's run is recorded through
+``metadata.run_rules``. ``suppress`` then flags by id and defaults the
+rest to false through the suppression runner both tables share
+(``alert_suppressions.suppress``)."""
 
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snowalert_spark.functions.variant import object_construct
-from snowalert_spark.rules import VIOLATION_QUERY, VIOLATION_SUPPRESSION, Rule, RuleRegistry
-from snowalert_spark.runners import metadata
+from snowalert_spark.rules import VIOLATION_QUERY, Rule, RuleRegistry
+from snowalert_spark.runners import alert_suppressions, metadata
 from snowalert_spark.store import ResultsStore
 
 CANONICAL_KEYS = (  # db.py:470-481
@@ -102,31 +102,19 @@ def main(
     run_id: str | None = None,
     now: dt.datetime | None = None,
 ) -> list[dict]:
-    run_id = run_id or uuid.uuid4().hex
-    now = now or dt.datetime.utcnow()
-    cutoff = now - dt.timedelta(days=1)
-    results = []
-    for rule in registry.load_rules(VIOLATION_QUERY):
-        start = dt.datetime.utcnow()
-        try:
-            rows = violation_rows(rule.df(spark), rule, cutoff)
-            n = store.append("violations", rows)
-            counts, err = {"inserted": n}, None
-        except Exception as e:
-            counts, err = None, e
-        results.append(
-            metadata.record(
-                store,
-                "query_metadata",
-                run_id,
-                query_name=rule.name,
-                run_type="VIOLATION QUERY",
-                start=start,
-                row_counts=counts,
-                error=err,
+    cutoff = (now or dt.datetime.utcnow()) - dt.timedelta(days=1)
+    return metadata.run_rules(
+        store,
+        "query_metadata",
+        run_id,
+        registry.load_rules(VIOLATION_QUERY),
+        "VIOLATION QUERY",
+        lambda rule: {
+            "inserted": store.append(
+                "violations", violation_rows(rule.df(spark), rule, cutoff)
             )
-        )
-    return results
+        },
+    )
 
 
 def suppress(
@@ -135,50 +123,6 @@ def suppress(
     registry: RuleRegistry,
     run_id: str | None = None,
 ) -> list[dict]:
-    """violation_suppressions_runner.py:15-28 analog."""
-    run_id = run_id or uuid.uuid4().hex
-    results = []
-    rules = registry.load_rules(VIOLATION_SUPPRESSION)
-    defaulted = False
-    for rule in rules:
-        last = rule is rules[-1]
-        start = dt.datetime.utcnow()
-        try:
-            store.read("violations").createOrReplaceTempView("data_violations")
-            ids = rule.df(spark)
-            n = store.upsert(
-                "violations",
-                ids.select(ids.columns[0]),
-                on="id",
-                when_matched={
-                    "suppressed": F.lit(True),
-                    "suppression_rule": F.lit(rule.name),
-                },
-                when_not_matched_insert=False,
-                when_not_matched_by_source=(
-                    {"suppressed": F.coalesce(F.col("suppressed"), F.lit(False))}
-                    if last
-                    else None
-                ),
-            )
-            counts, err = {"suppressed": n["updated"]}, None
-            defaulted = last
-        except Exception as e:
-            counts, err = None, e
-        results.append(
-            metadata.record(
-                store,
-                "query_metadata",
-                run_id,
-                query_name=rule.name,
-                run_type="VIOLATION SUPPRESSION",
-                start=start,
-                row_counts=counts,
-                error=err,
-            )
-        )
-    if not defaulted:
-        store.update(
-            "violations", F.col("suppressed").isNull(), {"suppressed": F.lit(False)}
-        )
-    return results
+    """violation_suppressions_runner.py:15-28 analog: the shared
+    suppression runner over the violations table."""
+    return alert_suppressions.suppress(spark, store, registry, "violations", run_id)

@@ -837,10 +837,10 @@ def land_batches(spark, batches: Iterator[tuple[str, list[dict]]]):
     """Land ``ingest`` output as temp views the cis_azure pack reads.
 
     Rows of one kind are uniform (the strict map emits every spec
-    column, absent → None), so the schema is derived per kind from the
-    spec column order; nested dicts/lists (variant-typed in the
-    reference DDL, azure_collect.py:70-741) are JSON-serialized so
-    ``col:path`` access works unchanged. Each kind registers under its
+    column, absent → None), so the columns of a kind are its spec
+    column order; values and types as ``collect.land_rows`` lands them
+    (nested dicts/lists, variant-typed in the reference DDL,
+    azure_collect.py:70-741, become JSON). Each kind registers under its
     reference landing name (``data_azure_collect_*`` /
     ``data_azure_collect_connection``) plus the bare ``azure_collect_*``
     alias two pack views use verbatim (cis_azure_pack.sql:2186,2226).
@@ -848,50 +848,21 @@ def land_batches(spark, batches: Iterator[tuple[str, list[dict]]]):
     Scale note: sized to collector output (inventory snapshots); the
     100 TB landing is a partitioned parquet append with this view shape.
     """
-    import datetime as _dt
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from snowalert_spark.sources.collect import replace_cached_view
+    from snowalert_spark.sources.collect import land_rows
 
     by_kind: dict[str, list[dict]] = {}
     for kind, rows in batches:
         by_kind.setdefault(kind, []).extend(rows)
 
-    def conv(v):
-        return _json.dumps(v, default=str) if isinstance(v, (dict, list)) else v
-
-    out = {}
-    for kind, rows in by_kind.items():
-        cols = list(dict.fromkeys(API_SPECS[kind]["response"].values()))
-        data = [[conv(r.get(c)) for c in cols] for r in rows]
-        fields = []
-        for i, c in enumerate(cols):
-            sample = next((row[i] for row in data if row[i] is not None), None)
-            if isinstance(sample, bool):
-                t = T.BooleanType()
-            elif isinstance(sample, int):
-                t = T.LongType()
-            elif isinstance(sample, float):
-                t = T.DoubleType()
-            elif isinstance(sample, _dt.datetime):
-                t = T.TimestampType()
-            else:
-                t = T.StringType()
-            fields.append(T.StructField(c, t))
-        # inventory-snapshot layout: a handful of CACHED partitions,
-        # not 32 near-empty ones re-parallelized per consumer (see
-        # collect.land_entries)
-        df = (
-            spark.createDataFrame(data, T.StructType(fields))
-            .repartition(max(1, len(data) // 5000 + 1))
-            .cache()
+    return {
+        landing_table(kind): land_rows(
+            spark,
+            rows,
+            list(dict.fromkeys(API_SPECS[kind]["response"].values())),
+            (landing_table(kind), f"azure_collect_{kind}"),
         )
-        for view in (landing_table(kind), f"azure_collect_{kind}"):
-            replace_cached_view(spark, df, view)
-        out[landing_table(kind)] = df
-    return out
+        for kind, rows in by_kind.items()
+    }
 
 
 def ingest(

@@ -23,7 +23,7 @@ import datetime as dt
 import json
 import time
 from collections import deque
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
 RATE_PER_SECOND = 24  # aws_collect.py:35-36 pacing envelope
@@ -240,6 +240,54 @@ def spec_columns(mspec: dict) -> list[str]:
     return cols
 
 
+def land_rows(spark, rows: list[dict], cols: list[str], views: Iterable[str]):
+    """Land driver-side collector rows as one cached frame registered
+    under each name in ``views``; returns the frame.
+
+    Each row gives its ``cols`` values in that order (absent → NULL);
+    nested dicts/lists (variant-typed in the reference DDL) are
+    JSON-serialized so the pack SQL's ``col:path`` access and LATERAL
+    FLATTEN work unchanged. Column types come from the first non-null
+    value (all-null → string).
+
+    Layout: inventory-snapshot tables are small and read by MANY pack
+    statements, so spreading a few hundred rows over defaultParallelism
+    (32) near-empty partitions makes every consumer pay 32 task
+    launches just to re-parallelize the same driver-side list. One
+    cached block per ~5k rows: measured 6x per-statement (0.53 -> 0.09
+    s on a 300-row landing); the 100 TB landing path is parquet, where
+    the file layout plays this role."""
+    from pyspark.sql import types as T
+
+    def conv(v):
+        return json.dumps(v, default=str) if isinstance(v, (dict, list)) else v
+
+    def typ(sample):
+        for py, t in (
+            (bool, T.BooleanType()),
+            (int, T.LongType()),
+            (float, T.DoubleType()),
+            (dt.datetime, T.TimestampType()),
+        ):
+            if isinstance(sample, py):
+                return t
+        return T.StringType()
+
+    data = [[conv(r.get(c)) for c in cols] for r in rows]
+    fields = [
+        T.StructField(c, typ(next((d[i] for d in data if d[i] is not None), None)))
+        for i, c in enumerate(cols)
+    ]
+    df = (
+        spark.createDataFrame(data, T.StructType(fields))
+        .repartition(max(1, len(data) // 5000 + 1))
+        .cache()
+    )
+    for view in views:
+        replace_cached_view(spark, df, view)
+    return df
+
+
 def land_entries(
     spark,
     entries: list[DBEntry],
@@ -250,20 +298,14 @@ def land_entries(
     collect→land seam the pack views read (reference: db.insert into
     ``data.aws_collect_*``, aws_collect.py:1241-1253).
 
-    Columns are the union of entity keys per table; nested dicts/lists
-    (variant-typed in the reference DDL) are JSON-serialized so the
-    pack SQL's ``col:path`` access and LATERAL FLATTEN work unchanged.
-    Column types come from the first non-null value (all-null → string).
+    Columns are the union of entity keys per table, after the spec's
+    declared columns; values and types as ``land_rows`` lands them.
 
     Scale note: this driver-side landing is sized to collector output
     (API inventory snapshots — thousands of rows, not fact data). The
     100 TB path is ``collect_distributed`` landing its JSON rows via a
     partitioned parquet append; the view shape is identical.
     """
-    import datetime as _dt
-
-    from pyspark.sql import types as T
-
     by_table: dict[str, list[dict]] = {}
     for e in entries:
         by_table.setdefault(e.table, []).append(e.entity)
@@ -273,9 +315,6 @@ def land_entries(
     for method, mspec in (spec or {}).items():
         declared[mspec.get("table", method.replace(".", "_"))] = spec_columns(mspec)
 
-    def conv(v):
-        return json.dumps(v, default=str) if isinstance(v, (dict, list)) else v
-
     out = {}
     for tname, rows in by_table.items():
         cols = list(declared.get(tname, []))
@@ -283,37 +322,8 @@ def land_entries(
             for k in r:
                 if k not in cols:
                     cols.append(k)
-        data = [[conv(r.get(c)) for c in cols] for r in rows]
-        fields = []
-        for i, c in enumerate(cols):
-            sample = next((row[i] for row in data if row[i] is not None), None)
-            if isinstance(sample, bool):
-                t = T.BooleanType()
-            elif isinstance(sample, int):
-                t = T.LongType()
-            elif isinstance(sample, float):
-                t = T.DoubleType()
-            elif isinstance(sample, _dt.datetime):
-                t = T.TimestampType()
-            else:
-                t = T.StringType()
-            fields.append(T.StructField(c, t))
-        # right-size + materialize the landing: inventory-snapshot
-        # tables are small and read by MANY pack statements, so spread-
-        # ing a few hundred rows over defaultParallelism (32) near-
-        # empty partitions makes every consumer pay 32 task launches
-        # just to re-parallelize the same driver-side list. One cached
-        # block per ~5k rows: measured 6x per-statement (0.53 -> 0.09 s
-        # on a 300-row landing); the 100 TB landing path is parquet,
-        # where the file layout plays this role.
-        df = (
-            spark.createDataFrame(data, T.StructType(fields))
-            .repartition(max(1, len(data) // 5000 + 1))
-            .cache()
-        )
         view = f"{prefix}{tname}"
-        replace_cached_view(spark, df, view)
-        out[view] = df
+        out[view] = land_rows(spark, rows, cols, [view])
     return out
 
 

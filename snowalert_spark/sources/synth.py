@@ -116,7 +116,7 @@ def synth_misc_landings(spark, n: int = 200) -> list[str]:
 
     out = []
     for name, schema in MISC_LANDINGS:
-        # small-table layout (see collect.land_entries): one cached
+        # small-table layout (see collect.land_rows): one cached
         # block, not defaultParallelism near-empty partitions
         # re-parallelized by each of the 92 consuming statements;
         # replace_cached_view unpersists the prior round's snapshot

@@ -84,7 +84,7 @@ def local_frame(
 def merge_plan(
     target: DataFrame,
     incoming: DataFrame,
-    on: str | list[str] | Column | Callable[[DataFrame, DataFrame], Column],
+    on: str | list[str] | Column,
     schema: T.StructType,
     when_matched: dict[str, Column] | None,
     when_not_matched_insert: bool,
@@ -93,11 +93,11 @@ def merge_plan(
     """The MERGE INTO statement as one lazy frame.
 
     ``incoming`` columns are renamed ``src_<c>`` and joined to
-    ``target`` on ``on`` (key names, a Column, or a function
-    ``(target, source) -> Column``). The result has ``schema``'s
-    columns: matched rows take ``when_matched`` updates, target-only
-    rows take ``when_not_matched_by_source`` updates (as-is when
-    absent), and source-only rows are inserted when
+    ``target`` on ``on``: key names, or a Column over the target's
+    columns and the ``src_``-prefixed source's. The result has
+    ``schema``'s columns: matched rows take ``when_matched`` updates,
+    target-only rows take ``when_not_matched_by_source`` updates (as-is
+    when absent), and source-only rows are inserted when
     ``when_not_matched_insert`` — otherwise the join is a left join, so
     no source-only row exists. The Observation yields
     ``{"updated", "inserted"}`` once the frame has been written.
@@ -132,13 +132,9 @@ def merge_plan(
         *[F.col(c).alias(f"src_{c}") for c in incoming.columns]
     ).withColumn("__src", F.lit(True))
     if isinstance(on, list):
-        cond = reduce(Column.__and__, [F.col(k) == F.col(f"src_{k}") for k in on])
-    elif isinstance(on, Column):
-        cond = on
-    else:
-        cond = on(target, src)
+        on = reduce(Column.__and__, [F.col(k) == F.col(f"src_{k}") for k in on])
     how = "full_outer" if when_not_matched_insert else "left"
-    joined = target.withColumn("__tgt", F.lit(True)).join(src, cond, how)
+    joined = target.withColumn("__tgt", F.lit(True)).join(src, on, how)
     has_tgt = F.col("__tgt").isNotNull()
     matched = has_tgt & F.col("__src").isNotNull()
     obs = Observation()
@@ -383,7 +379,7 @@ class ResultsStore:
         self,
         table: str,
         incoming: DataFrame,
-        on: str | list[str] | Column | Callable[[DataFrame, DataFrame], Column],
+        on: str | list[str] | Column,
         when_matched: dict[str, Column] | None = None,
         when_not_matched_insert: bool = True,
         partition_filter: Column | None = None,
@@ -391,9 +387,10 @@ class ResultsStore:
     ) -> dict[str, int]:
         """Join-based MERGE, committed in one pass (see ``merge_plan``):
 
-        - ``on``: join keys (list of column names) or a function
-          ``(target, source) -> Column`` for theta-matches (the alert
-          dedupe matches on document paths + a time bound, J8); or
+        - ``on``: join keys (list of column names) or a Column over
+          the target's columns and the ``src_``-prefixed source's, for
+          theta-matches (the alert dedupe matches on document paths +
+          a time bound, J8); or
           one target column name, for a key-set merge: ``incoming``'s
           one column lists the keys to match, tested as ``key IN
           (incoming)`` (the suppression runners flag ids this way).

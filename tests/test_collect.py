@@ -15,6 +15,7 @@ from snowalert_spark.sources.collect import (
     DBEntry,
     collect,
     collect_distributed,
+    land_entries,
     process_response,
 )
 
@@ -154,3 +155,44 @@ def test_args_dict_restores_list_shape():
     )
     assert t.args_dict == {"findingArns": ["arn:f1", "arn:f2"], "maxResults": 10}
     assert hash(t)  # still hashable for the seen-set
+
+
+def test_landing_types_columns_and_views(spark):
+    """Both collectors land through ``land_rows``: spec columns first,
+    then new keys in arrival order; nested values as JSON; each column
+    typed by its first non-null value (all-null → string); one cached
+    frame registered under every view name."""
+    from snowalert_spark.sources import azure_collect as AZ
+
+    t = dt.datetime(2024, 1, 2, 3)
+    out = land_entries(
+        spark,
+        [
+            DBEntry("iam_list_users", {"x": None, "flag": True, "n": 3, "arn": "a"}),
+            DBEntry("iam_list_users", {"f": 1.5, "at": t, "doc": {"k": [1, 2]}}),
+        ],
+        prefix="t_",
+        spec=SPEC,
+    )
+    df = out["t_iam_list_users"]
+    assert df.schema.simpleString() == (
+        "struct<recorded_at:string,account_id:string,error:string,x:string,"
+        "flag:boolean,n:bigint,arn:string,f:double,at:timestamp,doc:string>"
+    )
+    assert sorted((tuple(r)[3:] for r in df.collect()), key=str) == [
+        (None, None, None, None, 1.5, t, '{"k": [1, 2]}'),
+        (None, True, 3, "a", None, None, None),
+    ]
+    assert df.is_cached and df.rdd.getNumPartitions() == 1
+    assert spark.table("t_iam_list_users").count() == 2
+
+    (az,) = AZ.land_batches(
+        spark,
+        [("subscriptions", [{"subscription_id": "s1", "subscription_policies": {"a": 1}}])],
+    ).values()
+    assert spark.table("azure_collect_subscriptions").count() == 1
+    assert spark.table(AZ.landing_table("subscriptions")).count() == 1
+    assert az.columns == list(AZ.API_SPECS["subscriptions"]["response"].values())
+    (row,) = az.collect()
+    assert row["subscription_id"] == "s1"
+    assert row["subscription_policies"] == '{"a": 1}'

@@ -10,6 +10,7 @@ run_violations.py:7-203, FIXTURES.md F13):
 - violations: stable MD5 identity (recomputed client-side), error
   quarantine (division-by-zero rule recorded in metadata, run
   continues), suppression by id
+- the quarantine contract, the same for every rule kind
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from snowalert_spark.runners import (
     alert_queries,
     alert_suppressions,
     metadata,
+    policies,
     violation_queries,
 )
 from snowalert_spark.store import ResultsStore
@@ -464,7 +466,7 @@ def test_suppression_fold_one_rule_publishes_once(spark, tmp_path, table):
     ref.upsert(
         table,
         spark.sql(sql).select(F.col("id").alias("sid")),
-        on=lambda t, s: F.col(key) == F.col("src_sid"),
+        on=F.col(key) == F.col("src_sid"),
         when_matched={
             "suppressed": F.lit(True),
             "suppression_rule": F.lit("_S1" + sfx),
@@ -523,6 +525,94 @@ def test_suppression_fold_without_rules_still_defaults(spark, store, table):
     assert {k: s for k, (s, _) in _flags(store, table).items()} == {
         "a": False, "b": False, "c": False, "d": True,
     }
+
+
+# -- error quarantine: one contract for every rule kind --------------------
+
+# kind → (rule suffix, metadata table, runner, SQL of a good rule that
+# touches id/object ``k``, the counts such a rule records)
+QUARANTINE = {
+    "alert_query": (
+        "_ALERT_QUERY",
+        "query_metadata",
+        lambda spark, store, reg, run_id: alert_queries.main(
+            spark, store, reg, from_ts=T0 - dt.timedelta(minutes=90), to_ts=T0,
+            run_id=run_id,
+        ),
+        lambda k: (
+            f"SELECT 'the-actor' AS actor, '{k}' AS object, 'q' AS title, "
+            "TIMESTAMP '2024-01-01 12:00:00' AS event_time, 'd' AS description"
+        ),
+        {"updated": 0, "inserted": 1},
+    ),
+    "alert_suppression": (
+        "_ALERT_SUPPRESSION",
+        "query_metadata",
+        lambda spark, store, reg, run_id: alert_suppressions.main(
+            spark, store, reg, run_id=run_id
+        ),
+        lambda k: _rule_sql("alerts", f"alert.ALERT_ID = '{k}'"),
+        {"suppressed": 1},
+    ),
+    "violation_query": (
+        "_VIOLATION_QUERY",
+        "query_metadata",
+        lambda spark, store, reg, run_id: violation_queries.main(
+            spark, store, reg, run_id=run_id, now=T0
+        ),
+        lambda k: f"SELECT '{k}' AS OBJECT, 'open port' AS TITLE",
+        {"inserted": 1},
+    ),
+    "violation_suppression": (
+        "_VIOLATION_SUPPRESSION",
+        "query_metadata",
+        lambda spark, store, reg, run_id: violation_queries.suppress(
+            spark, store, reg, run_id=run_id
+        ),
+        lambda k: _rule_sql("violations", f"id = '{k}'"),
+        {"suppressed": 1},
+    ),
+    "policy": (
+        "_POLICY_DEFINITION",
+        "run_metadata",
+        lambda spark, store, reg, run_id: policies.main(
+            spark, store, reg, run_id=run_id
+        ),
+        lambda k: f"SELECT '{k}' AS title, TRUE AS passing",
+        {"checks": 1, "passing": 1},
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", list(QUARANTINE))
+def test_rule_quarantine_contract(spark, store, kind):
+    """Three rules of one kind, the middle one raising: it records one
+    ERROR row, the rule after it still runs and records its counts, and
+    the rows come in ``load_rules`` order under the call's RUN_ID."""
+    suffix, md_table, run, good, counts = QUARANTINE[kind]
+    for table in ("alerts", "violations"):
+        _seed(spark, store, table)
+    reg = RuleRegistry()
+    # created out of order: the rows must follow load_rules, not this
+    for name, sql in [
+        ("_Q3", good("c")),
+        ("_Q1", good("a")),
+        ("_Q2", "SELECT * FROM no_such_quarantine_view"),
+    ]:
+        reg.create(name + suffix, sql=sql, comment=name)
+    res = run(spark, store, reg, "run-q")
+    md = metadata.read_metadata(store, md_table)
+    assert [m["QUERY_NAME"] for m in md] == [r.name for r in reg.load_rules(suffix)]
+    assert [m["QUERY_NAME"] for m in md] == ["_Q1" + suffix, "_Q2" + suffix, "_Q3" + suffix]
+    assert {m["RUN_ID"] for m in md} == {"run-q"}
+    assert ["ERROR" in m for m in md] == [False, True, False]
+    assert "no_such_quarantine_view" in md[1]["ERROR"]["EXCEPTION_ONLY"]
+    assert "ROW_COUNT" not in md[1]
+    assert md[0]["ROW_COUNT"] == md[2]["ROW_COUNT"] == counts
+    if kind == "policy":  # the runner returns the checks, not the rows
+        assert [p.get("checks") for p in res] == [1, None, 1]
+    else:
+        assert res == md
 
 
 # -- scheduled ticks: job budget, and the benchmark's traced store ---------

@@ -80,14 +80,14 @@ def test_upsert_counter_increment(store, spark):
     store.upsert(
         "alerts",
         mk(1),
-        on=lambda t, s: (F.col("alert.OBJECT") == F.col("src_alert.OBJECT"))
+        on=(F.col("alert.OBJECT") == F.col("src_alert.OBJECT"))
         & (F.col("alert.DESCRIPTION") == F.col("src_alert.DESCRIPTION")),
         when_matched={"counter": F.col("counter") + F.col("src_counter")},
     )
     store.upsert(
         "alerts",
         mk(2),
-        on=lambda t, s: (F.col("alert.OBJECT") == F.col("src_alert.OBJECT"))
+        on=(F.col("alert.OBJECT") == F.col("src_alert.OBJECT"))
         & (F.col("alert.DESCRIPTION") == F.col("src_alert.DESCRIPTION")),
         when_matched={"counter": F.col("counter") + F.col("src_counter")},
     )
@@ -281,7 +281,7 @@ def test_commit_job_budgets(store, spark):
         lambda: store.upsert(
             "violations",
             _violations(spark, ["v3", "new"]),
-            on=lambda t, s: (F.col("id") == F.col("src_id")) & _hot(),
+            on=(F.col("id") == F.col("src_id")) & _hot(),
             when_matched={"suppressed": F.lit(False)},
             partition_filter=_hot(),
         ),

@@ -10,11 +10,12 @@ import pytest
 
 from snowalert_spark.operators import skew
 from snowalert_spark.rules import RuleRegistry
-from snowalert_spark.runners import policies
+from snowalert_spark.runners import metadata, policies
+from snowalert_spark.store import ResultsStore
 from snowalert_spark.tables import table
 
 
-def test_policy_definitions(spark):
+def test_policy_definitions(spark, tmp_path):
     reg = RuleRegistry()
     reg.create(
         "MFA_ENROLLMENT_SYSTEM_POLICY_DEFINITION",
@@ -26,13 +27,18 @@ def test_policy_definitions(spark):
         """,
         comment="MFA enrollment policy\n@id mfa_policy",
     )
-    out = policies.main(spark, None, reg)
+    store = ResultsStore(spark, str(tmp_path / "results"))
+    out = policies.main(spark, store, reg, run_id="r1")
     assert len(out) == 1
     p = out[0]
     assert p["checks"] == 2 and p["passing"] == 1
     assert {c["title"] for c in p["results"]} == {
         "All admins enrolled in MFA", "No open violations",
     }
+    (md,) = metadata.read_metadata(store, "run_metadata")
+    assert md["RUN_ID"] == "r1" and md["RUN_TYPE"] == "POLICY"
+    assert md["QUERY_NAME"] == "MFA_ENROLLMENT_SYSTEM_POLICY_DEFINITION"
+    assert md["ROW_COUNT"] == {"checks": 2, "passing": 1}
 
 
 def test_stateful_sessionization_stream(spark, tmp_path):
